@@ -101,7 +101,7 @@ object Presets {
     * never packed; train docs dropped by the mix carry split 'unused').
     *
     * Scale: every stage is the bounded production variant — capped LSH
-    * buckets, pointer-jumped components, broadcast fraction joins, the
+    * buckets, union-find contracted components, broadcast fraction joins, the
     * two-phase packing scan. Nothing quadratic, nothing driver-sized
     * beyond the per-source fraction table and the pack bucket offsets. */
   def assembleDataset(documents: DataFrame, benchmark: DataFrame,

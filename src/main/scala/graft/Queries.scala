@@ -99,7 +99,7 @@ object Queries {
       documents(s, dir), sigsDf = Some(minhashSigs(s, dir))))
   // the iterative near-dup CC stage is memoized so its consumers
   // (q_neardup_clusters, the keep-set verdict, the leakage-safe split)
-  // run the pointer-jump loop once per process — the same stage sharing
+  // run the contraction loop once per process — the same stage sharing
   // Presets.assembleDataset already does internally (guide §2.4)
   private def nearDupClustersStage(s: SparkSession, dir: String) =
     cachedStage(s, dir, "neardupClusters")(TextDedup.nearDupClusters(

@@ -2,7 +2,7 @@ package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
 /** Per-stage checkpointing with lineage + counters (north rule: every
@@ -25,6 +25,12 @@ import java.nio.charset.StandardCharsets
   * its recorded input fingerprint equals the current chained fingerprint
   * (config + upstream fingerprints hashed in), making restarts idempotent
   * and stale checkpoints self-invalidating.
+  *
+  * Crash safety: the manifest is the commit record. `write` deletes it
+  * before computing or overwriting the data, and publishes the new one by
+  * an atomic rename of a fully written temp file, so a run that dies
+  * anywhere in between leaves no manifest — the next run recomputes
+  * instead of resuming on half-written data under an older manifest.
   */
 final class CheckpointStore(root: String, spark: SparkSession) {
 
@@ -36,7 +42,8 @@ final class CheckpointStore(root: String, spark: SparkSession) {
     val p = manifestPath(stage)
     Files.exists(p) && {
       val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      txt.contains(s""""input_fingerprint": "$fingerprint"""")
+      CheckpointStore.FingerprintField.findFirstMatchIn(txt)
+        .exists(_.group(1) == fingerprint)
     }
   }
 
@@ -44,9 +51,11 @@ final class CheckpointStore(root: String, spark: SparkSession) {
 
   /** Write the stage table + manifest; returns the re-read DataFrame so
     * downstream stages consume the materialized checkpoint (truncated
-    * lineage), not the logical plan. */
-  def write(stage: String, df: DataFrame, fingerprint: String): DataFrame = {
+    * lineage), not the logical plan. `df` is evaluated only after the old
+    * manifest is gone. */
+  def write(stage: String, df: => DataFrame, fingerprint: String): DataFrame = {
     val t0 = System.nanoTime()
+    Files.deleteIfExists(manifestPath(stage))
     df.write.mode("overwrite").parquet(dataPath(stage))
     val back = read(stage)
     val partCounts = back.groupBy(spark_partition_id().as("p"))
@@ -67,7 +76,9 @@ final class CheckpointStore(root: String, spark: SparkSession) {
          |  "write_wall_ms": $wallMs
          |}""".stripMargin
     Files.createDirectories(dir(stage))
-    Files.write(manifestPath(stage), manifest.getBytes(StandardCharsets.UTF_8))
+    val tmp = dir(stage).resolve("_manifest.json.tmp")
+    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, manifestPath(stage), StandardCopyOption.ATOMIC_MOVE)
     back
   }
 
@@ -78,6 +89,8 @@ final class CheckpointStore(root: String, spark: SparkSession) {
 }
 
 object CheckpointStore {
+  private val FingerprintField = """"input_fingerprint"\s*:\s*"([^"]*)"""".r
+
   /** Deterministic chained fingerprint (hex of 64-bit FNV-1a). */
   def fingerprint(parts: String*): String = {
     var h = 0xcbf29ce484222325L

@@ -19,17 +19,17 @@ import scala.collection.mutable
   * Giant components (SURVEY.md §7.5): rare shared tokens (e.g. nicknames)
   * pass the relative blocking threshold and form cross-family hubs that
   * glue most refs into one component; plain BFS there is
-  * O(edges x cluster-profile) and intractable. [[clusterGiant]] applies
-  * the reference's own remedy — the stricter 2-common-token edge
-  * condition — to cluster family cores, then attaches the remaining
-  * weak-edge-only refs (nickname/initial forms) to adjacent core clusters
-  * in one bounded priority-ordered pass through the same consistency
-  * engine. Small components always use the exact reference BFS.
+  * O(edges x cluster-profile) and intractable. The distributed giant
+  * path lives in [[graft.pipeline.GreedyClustering]]: it applies the
+  * reference's own remedy — the stricter 2-common-token edge condition —
+  * to cluster family cores with [[clusterCore]], then chains and attaches
+  * the remaining weak-edge-only refs (nickname/initial forms) through the
+  * same consistency engine. Small components always use the exact
+  * reference BFS.
   */
 object Greedy {
 
   final case class Ref(id: Long, name: String, weight: Long, toks: Array[Tok])
-  final case class Edge(a: Long, b: Long, commonCnt: Int)
 
   private type Prio = (Int, Int, Long, Long)
   private def priority(r: Ref): Prio =
@@ -42,7 +42,7 @@ object Greedy {
   /** Core BFS that also returns each cluster's final profile (used by the
     * giant-component attachment pass). */
   def clusterCore(refs: Seq[Ref], edges: Seq[(Long, Long)], h: Hierarchy)
-      : (Seq[(Long, Long)], mutable.HashMap[Long, ClusterProfile], mutable.HashMap[Long, Long]) = {
+      : (Seq[(Long, Long)], mutable.HashMap[Long, ClusterProfile]) = {
     val byId = refs.map(r => r.id -> r).toMap
     val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
     for ((a, b) <- edges if a != b && byId.contains(a) && byId.contains(b)) {
@@ -57,14 +57,12 @@ object Greedy {
     }.toMap
 
     val out = mutable.ArrayBuffer.empty[(Long, Long)]
-    val assign = mutable.HashMap.empty[Long, Long]
     val profiles = mutable.HashMap.empty[Long, ClusterProfile]
     val visited = mutable.HashSet.empty[Long]
 
     for (seed <- sorted if !visited.contains(seed.id)) {
       visited += seed.id
       out += seed.id -> seed.id
-      assign(seed.id) = seed.id
       val profile = ClusterProfile.fromToks(seed.toks.toSeq)
       profiles(seed.id) = profile
       val queue = mutable.Queue(seed)
@@ -77,7 +75,6 @@ object Greedy {
           if (consistent) {
             visited += adjId
             out += adjId -> seed.id
-            assign(adjId) = seed.id
             profile.merge(result)
             queue += cand
           }
@@ -87,54 +84,8 @@ object Greedy {
     // singletons (no candidate edges): own cluster
     for (r <- refs if !adj.contains(r.id)) {
       out += r.id -> r.id
-      assign(r.id) = r.id
       profiles.getOrElseUpdate(r.id, ClusterProfile.fromToks(r.toks.toSeq))
     }
-    (out.toSeq, profiles, assign)
-  }
-
-  /** Giant-component path: strong-edge (common >= 2) core clustering, then
-    * one attachment pass over weak edges for refs left in singleton
-    * clusters. */
-  def clusterGiant(refs: Seq[Ref], edges: Seq[Edge], h: Hierarchy): Seq[(Long, Long)] = {
-    val strong = edges.collect { case e if e.commonCnt >= 2 => (e.a, e.b) }
-    val (_, profiles, assign) = clusterCore(refs, strong, h)
-
-    val clusterSize = mutable.HashMap.empty[Long, Int].withDefaultValue(0)
-    assign.valuesIterator.foreach(c => clusterSize(c) += 1)
-
-    val byId = refs.map(r => r.id -> r).toMap
-    val prioOf = refs.sortBy(priority).iterator.zipWithIndex
-      .map { case (r, i) => r.id -> i }.toMap
-    val allAdj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
-    for (e <- edges if e.a != e.b && byId.contains(e.a) && byId.contains(e.b)) {
-      allAdj.getOrElseUpdate(e.a, mutable.ArrayBuffer.empty) += e.b
-      allAdj.getOrElseUpdate(e.b, mutable.ArrayBuffer.empty) += e.a
-    }
-
-    val loners = refs
-      .filter(r => clusterSize(assign(r.id)) == 1 && allAdj.contains(r.id))
-      .sortBy(priority)
-    for (r <- loners if clusterSize(assign(r.id)) == 1) {
-      val neighbors = allAdj(r.id).distinct.sortBy(prioOf)
-      var attached = false
-      var i = 0
-      while (!attached && i < neighbors.length) {
-        val c = assign(neighbors(i))
-        if (c != r.id) {
-          val profile = profiles(c)
-          val result = profile.matchRef(h, r.toks.toSeq)
-          if (result.isConsistent || result.canBecomeConsistent) {
-            clusterSize(assign(r.id)) -= 1
-            assign(r.id) = c
-            clusterSize(c) += 1
-            profile.merge(result)
-            attached = true
-          }
-        }
-        i += 1
-      }
-    }
-    refs.map(r => r.id -> assign(r.id))
+    (out.toSeq, profiles)
   }
 }

@@ -155,7 +155,7 @@ object Sampling {
     * `clustersDf` defaults to [[TextDedup.nearDupClusters]] (LSH pair graph
     * connected components); pass a precomputed frame to reuse a pipeline
     * stage. Scale shape: clustering cost is the dedup pipeline's (already
-    * bucketed + pointer-jumped); the split itself is one hash projection —
+    * bucketed + union-find contracted); the split itself is one hash projection —
     * no extra shuffle.
     *
     * Output: (doc_id, cluster_id, split ∈ train|val|test). */

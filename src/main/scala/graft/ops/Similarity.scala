@@ -277,14 +277,21 @@ object Similarity {
 
   /** Rank (vec_id, neighbor_id, cosine) rows to their per-vec top-k with a
     * bounded insertion fold instead of a row_number() window (round 6,
-    * guide §2.4): the window shuffled every scored row AND sorted each
-    * whole partition to rank rows it then threw away (k of ~candidates
-    * kept); the fold ships the same skinny rows but keeps only k per group
-    * in O(rows x k) with no sort buffer. Identical output: same (cosine
-    * desc, neighbor_id asc) order via Spark's own double total order
-    * ([[cmpD]]), same row_number semantics (ranks 1..k, ties broken by
-    * neighbor asc). Shared by [[annTopK]] and [[ivfTopKFrom]]'s final
-    * merge; pinned against the window formulation in RewriteParitySpec. */
+    * guide §2.4): the window plan capped rows map-side (a partial
+    * WindowGroupLimit before its exchange, about k rows per vec per map
+    * partition) and then sorted each whole partition to rank them; the
+    * fold keeps only k per group in O(rows x k) with no sort buffer. The
+    * gain is the removed per-partition sorts, not shuffle volume: the fold
+    * has no map-side cap and also shuffles its 8-byte grouping key, so it
+    * can move more bytes than the window did. Identical output: same
+    * (cosine desc, neighbor_id asc) order via Spark's own double total
+    * order ([[cmpD]]), same row_number semantics (ranks 1..k, ties broken
+    * by neighbor asc). Precondition: `cosine` is non-null — the typed
+    * decode throws on a null, where the window ordered it NULLS LAST (no
+    * caller can produce one: 0/0 gives NaN, not null). Used by [[annTopK]]
+    * only; [[ivfTopKFrom]] keeps its window, because the fold measured no
+    * win there. Pinned against the window formulation in
+    * RewriteParitySpec. */
   private def topKRanked(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._

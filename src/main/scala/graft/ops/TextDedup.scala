@@ -320,9 +320,9 @@ object TextDedup {
     * cluster_id = min doc id reachable through near-dup pairs (singletons
     * cluster with themselves). The standard "keep one per near-dup
     * cluster" reduction a training-data pipeline runs after pair
-    * generation; reuses the pointer-jumped min-label CC (O(log d) rounds,
-    * each two hash shuffles), so it holds at any scale the pair step
-    * itself survives. */
+    * generation; reuses the union-find contraction CC (each task contracts
+    * its share of the pairs before one exchange per round, per-task memory
+    * bounded), so it holds at any scale the pair step itself survives. */
   def nearDupClusters(documents: DataFrame,
       pairsDf: Option[DataFrame] = None): DataFrame = {
     val pairs = pairsDf.getOrElse(lshPairs(documents))

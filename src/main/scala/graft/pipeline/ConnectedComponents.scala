@@ -1,115 +1,126 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions._
 
 /** Stage 5a — DataFrame-based connected components over the candidate
-  * graph (iterative transitive closure; the reference's alternative
-  * clusterer `connectedCandidatesGuavaGraphs` + `GraphAnalysis
-  * .connectedComponents`, logic/MessagePassing.java:118-141,
-  * helper/GraphAnalysis.java:17-38 — the paper's "connected component"
-  * baseline, and the component pre-pass for greedy consistency
-  * clustering).
+  * graph (the reference's alternative clusterer
+  * `connectedCandidatesGuavaGraphs` + `GraphAnalysis.connectedComponents`,
+  * logic/MessagePassing.java:118-141, helper/GraphAnalysis.java:17-38 —
+  * the paper's "connected component" baseline, and the component pre-pass
+  * for greedy consistency clustering).
   *
-  * Algorithm: minimum-label propagation. labels(x) <- min(labels(x),
-  * min over neighbors labels(y)) until fixpoint; each iteration is two
-  * hash-shuffles, `localCheckpoint` truncates lineage (no recursion in
-  * Catalyst). ER candidate graphs after blocking have small components and
-  * tiny diameters, so the loop runs ~O(component diameter) iterations; the
-  * iteration cap + per-iteration changed-count are surfaced for
-  * observability. Skew (giant components) is handled upstream by the
-  * blocking valves and downstream by component-size caps in the greedy
-  * stage.
+  * Algorithm: union-find contraction per partition. Each round runs a
+  * union-find over every task's edges (at most [[UnionFindEdges]] at a
+  * time) and emits (node, min id of its local set); one aggregation per
+  * node then takes the minimum of its local roots as its new label and
+  * links every other root it saw to that minimum. Those links are the
+  * next round's (much smaller) graph; the loop ends when no node saw two
+  * distinct roots. Contraction happens inside the tasks, before any
+  * exchange, so the round count depends on how edges are spread over
+  * tasks, not on component diameter: one round when the input is a single
+  * partition, two when the cross-partition links fit one union-find.
+  * Skew (giant components) is handled upstream by the blocking valves and
+  * downstream by component-size caps in the greedy stage.
   */
 object ConnectedComponents {
 
+  /** The most edges one task's union-find holds before it flushes its
+    * (node, root) pairs and starts over, and the edges per partition the
+    * loop aims at when it redistributes a round's links. Bounds a task's
+    * union-find at 2 x this many nodes: about 14 MB of primitive arrays. */
+  val UnionFindEdges: Int = 1 << 18
+
   /** edges: (src, dst) undirected pair per surviving candidate (any
-    * direction). Returns (id, component) for every node appearing in
-    * edges; component = min node id reachable.
+    * direction; duplicates, reversed copies and self-loops allowed; a null
+    * endpoint leaves a self-loop on the other one). Returns
+    * (id, component) for every node appearing in edges, including nodes
+    * that appear only in self-loops; component = min node id reachable.
     *
-    * Each round does min-label propagation over edges PLUS a pointer-jump
-    * (label <- label(label), well-defined because labels only ever take
-    * node-id values and only decrease), which halves the remaining
-    * label-chain depth — O(log diameter) rounds, so a 10^6-hop chain
-    * converges in ~20 rounds instead of 10^6. Raises instead of silently
-    * returning wrong labels if the cap is somehow hit. */
+    * One round: `mapPartitions` union-find over the round's edges, flushed
+    * every [[UnionFindEdges]] edges (each flushed set is connected, so a
+    * flush only costs contraction, never correctness) -> one aggregation
+    * per node: label = min(roots), links = (label, r) for every other
+    * root r -> every known node's label is composed with that step. The
+    * round materializes one frame, state(id, label, rest): rows with an
+    * id carry a node's current label, rows with a non-null rest carry the
+    * next round's links (label, r) for r in rest. The number of links is
+    * read from an `Observation` on that same materializing action, so the
+    * convergence test costs no job; zero links ends the loop.
+    *
+    * Termination. Every node of round k+1's graph is a root of round k.
+    * Links never join a node to itself, so from round 1 on every local set
+    * holds an edge and its root is its minimum: the largest node of the
+    * round's graph is never a root, and each round's graph has fewer
+    * nodes than the one before, so the loop always ends. Faster in
+    * practice: the links are coalesced into
+    * ceil(links / [[UnionFindEdges]]) partitions, so once they fit one
+    * union-find, the next round sees them all at once and is the last.
+    * The `maxIter` guard only trips when the links stay above
+    * [[UnionFindEdges]] for `maxIter` rounds (say, a path of millions of
+    * edges whose ids are scattered over the partitions); it raises rather
+    * than return wrong labels.
+    *
+    * Lineage is cut every round: executor-local blocks by default; with
+    * `durableDir` the round's state is written to
+    * `$durableDir/cc_labels_r$round` every `durableEvery` rounds (round 0
+    * included) and read back — the durable path for long-lived clusters
+    * with dynamic allocation, where executor-local blocks can be lost (the
+    * Pipeline runner passes its stage work dir here). */
   def run(edges: DataFrame, maxIter: Int = 50,
       durableDir: Option[String] = None, durableEvery: Int = 5): DataFrame = {
     val spark = edges.sparkSession
-    // lineage truncation per round: executor-local blocks by default; with
-    // `durableDir` the loop state is ALSO persisted to parquet every
-    // `durableEvery` rounds — the durable path for long-lived clusters with
-    // dynamic allocation, where executor-local checkpoint blocks can be
-    // lost (the Pipeline runner passes its stage work dir here).
+    import spark.implicits._
     def cut(df: DataFrame, round: Int): DataFrame = durableDir match {
       case Some(dir) if round % durableEvery == 0 =>
         val path = s"$dir/cc_labels_r$round"
-        df.write.mode("overwrite").parquet(path)
+        // rows of one label side by side: its dictionary indices then
+        // run-length encode, which keeps the snapshot small
+        df.sortWithinPartitions(col("label")).write.mode("overwrite").parquet(path)
         spark.read.parquet(path)
       case _ => df.localCheckpoint()
     }
-    // dedup at HALF volume, then mirror (round 6, guide §2.3): normalize
-    // each edge to (min, max) and distinct THAT, then union the reversed
-    // copy — the previous shape unioned both directions first and ran the
-    // distinct over twice the rows. The mirrored union needs no second
-    // dedup: normalized rows have src <= dst, reversed ones dst <= src, so
-    // overlap is confined to self-loops — whose duplicate rows are
-    // harmless under the min() aggregations this loop consists of.
-    val und = edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-    val sym = und
-      .union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
 
-    // seed labels with the FIRST min-label hop folded into initialization
-    // (label = min(id, min neighbor) in one aggregation over sym — every
-    // node appears as src after symmetrization): round-6 change saving one
-    // full propagation round; the fixpoint (min reachable id) is unchanged
-    // because any label value is still a reachable node id.
-    var labels = sym.groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("nd"))
-      .select(col("id"), least(col("id"), col("nd")).as("label"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("label")).as("nbr_label"))
-      // carry the pre-round label ("old") through the round instead of
-      // re-joining `next` against `labels` afterwards: the convergence
-      // check becomes a scan of the just-checkpointed frame (one short
-      // isEmpty job) instead of an extra join+shuffle+count job per round
-      // (round-6 change; labels are monotonically non-increasing, so
-      // "changed" == "label < old" exactly as the removed join computed).
-      val prop = labels
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      val next = cut(prop
-        .join(prop.select(col("id").as("label"), col("label").as("jump")),
+    var pairs: Dataset[(Long, Long)] = edges
+      .select(least(col("src"), col("dst")).cast("long").as("a"),
+        greatest(col("src"), col("dst")).cast("long").as("b"))
+      .filter(col("a").isNotNull)
+      .as[(Long, Long)]
+    var state: DataFrame = null
+    var links = -1L
+    var round = 0
+    while (links != 0L && round < maxIter) {
+      val step = pairs.mapPartitions(LocalUnionFind.roots).toDF("id", "root")
+        .groupBy(col("id"))
+        .agg(min(col("root")).as("label"), collect_set(col("root")).as("roots"))
+        .select(col("id"), col("label"),
+          when(size(col("roots")) > 1, array_remove(col("roots"), col("label")))
+            .as("rest"))
+      // round 0's nodes are all the nodes; later rounds see only the
+      // contracted graph, so each known label moves to its step label and
+      // the step's links ride along as id-less rows
+      val next = if (state == null) step else state.filter(col("id").isNotNull)
+        .join(step.select(col("id").as("label"), col("label").as("hop")),
           Seq("label"), "left")
-        .select(col("id"),
-          coalesce(col("jump"), col("label")).as("label"),
-          (coalesce(col("jump"), col("label")) < col("old")).as("changed")),
-        iter)
-      // single-job convergence check: max(changed) over the checkpointed
-      // rows — isEmpty/limit(1) on an EMPTY result escalates through
-      // log(partitions) scan batches, one Spark job each, so the converged
-      // round paid ~4 jobs for one boolean (round 6, measured via the
-      // Bench job counter)
-      converged = !next.agg(coalesce(max(col("changed")), lit(false)))
-        .collect()(0).getBoolean(0)
-      labels = next.select(col("id"), col("label"))
-      iter += 1
+        .select(col("id"), coalesce(col("hop"), col("label")).as("label"),
+          lit(null).cast("array<bigint>").as("rest"))
+        .unionByName(step.filter(col("rest").isNotNull)
+          .select(lit(null).cast("bigint").as("id"), col("label"), col("rest")))
+      val obs = Observation()
+      state = cut(next.observe(obs, coalesce(
+        sum(when(col("rest").isNotNull, size(col("rest")))), lit(0L)).as("links")), round)
+      links = obs.get("links").asInstanceOf[Long]
+      if (links > 0L) pairs = state.filter(col("rest").isNotNull)
+        .select(col("label"), explode(col("rest")))
+        .as[(Long, Long)]
+        .coalesce(((links + UnionFindEdges - 1) / UnionFindEdges).toInt)
+      round += 1
     }
-    if (!converged)
+    if (links != 0L)
       sys.error(s"ConnectedComponents: not converged after $maxIter rounds " +
-        "(component diameter > 2^maxIter is impossible, so this indicates a bug)")
-    labels.withColumnRenamed("label", "component")
+        s"($links links left)")
+    state.filter(col("id").isNotNull)
+      .select(col("id"), col("label").as("component"))
   }
 
   /** Full assignment for every mention: singletons keep their own id as
@@ -118,12 +129,8 @@ object ConnectedComponents {
     * MessagePassing.java:138). */
   def assignments(mentions: DataFrame, candidates: DataFrame,
       durableDir: Option[String] = None): DataFrame = {
-    // no pre-distinct: run() symmetrizes and distincts anyway, so the
-    // extra exchange here was pure overhead (round-6 change, guide §2.4)
-    val edges = candidates
-      .select(least(col("dst_id"), col("org_id")).as("src"),
-        greatest(col("dst_id"), col("org_id")).as("dst"))
-    val comp = run(edges, durableDir = durableDir)
+    val comp = run(candidates.select(col("dst_id").as("src"), col("org_id").as("dst")),
+      durableDir = durableDir)
     val withComp = mentions
       .join(comp.withColumnRenamed("id", "mention_id"), Seq("mention_id"), "left")
       .withColumn("component_id", coalesce(col("component"), col("mention_id")))
@@ -140,7 +147,8 @@ object ConnectedComponents {
   // ---------------------------------------------------------------- oracle
 
   /** DuckDB CTEs computing the same assignment via a recursive reachability
-    * closure (sound for oracle scale; the Spark side is the scalable loop).
+    * closure (sound for oracle scale; the Spark side is the contraction
+    * loop).
     * Append after Blocking.ctes. */
   val ctes: String = ctesOver("candidates")
 
@@ -182,4 +190,103 @@ object ConnectedComponents {
       |  SELECT a.mention_id, a.name, a.weight, a.component_id, r.cluster_id
       |  FROM assignments_pre a JOIN cc_reps r USING (component_id)
       |)""".stripMargin
+}
+
+/** Union-find over one task's edges, keyed by node id in a primitive
+  * open-addressing table (linear probing, load <= 1/2): no boxed keys, and
+  * at most 2 x [[ConnectedComponents.UnionFindEdges]] nodes before a flush.
+  * A set's root is always its minimum id (the larger root is linked under
+  * the smaller one; paths are halved on every find). */
+private final class LocalUnionFind {
+  private var slots = new Array[Int](1024) // hash slot -> node index + 1, 0 = free
+  private var ids = new Array[Long](512) // node index -> id
+  private var parent = new Array[Int](512) // node index -> parent index
+  private var n = 0
+
+  def size: Int = n
+  def id(i: Int): Long = ids(i)
+  def rootId(i: Int): Long = ids(find(i))
+
+  def clear(): Unit = {
+    java.util.Arrays.fill(slots, 0)
+    n = 0
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    val ra = find(indexOf(a))
+    val rb = find(indexOf(b))
+    if (ra != rb) {
+      if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
+    }
+  }
+
+  private def slotOf(id: Long, mask: Int): Int =
+    ((id * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+
+  private def indexOf(id: Long): Int = {
+    if (2 * (n + 1) > slots.length) grow()
+    val mask = slots.length - 1
+    var s = slotOf(id, mask)
+    while (slots(s) != 0 && ids(slots(s) - 1) != id) s = (s + 1) & mask
+    if (slots(s) != 0) slots(s) - 1
+    else {
+      if (n == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, 2 * n)
+        parent = java.util.Arrays.copyOf(parent, 2 * n)
+      }
+      ids(n) = id
+      parent(n) = n
+      slots(s) = n + 1
+      n += 1
+      n - 1
+    }
+  }
+
+  private def grow(): Unit = {
+    slots = new Array[Int](2 * slots.length)
+    val mask = slots.length - 1
+    var i = 0
+    while (i < n) {
+      var s = slotOf(ids(i), mask)
+      while (slots(s) != 0) s = (s + 1) & mask
+      slots(s) = i + 1
+      i += 1
+    }
+  }
+
+  private def find(i0: Int): Int = {
+    var i = i0
+    while (parent(i) != i) {
+      parent(i) = parent(parent(i))
+      i = parent(i)
+    }
+    i
+  }
+}
+
+private object LocalUnionFind {
+  /** (node, min id of its local set) for every node of a partition's
+    * edges, flushed every [[ConnectedComponents.UnionFindEdges]] edges. */
+  def roots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] =
+    new Iterator[(Long, Long)] {
+      private val uf = new LocalUnionFind
+      private var i = 0
+      def hasNext: Boolean = i < uf.size || (edges.hasNext && { fill(); true })
+      def next(): (Long, Long) = {
+        if (!hasNext) throw new NoSuchElementException
+        val r = (uf.id(i), uf.rootId(i))
+        i += 1
+        r
+      }
+      private def fill(): Unit = {
+        uf.clear()
+        i = 0
+        var e = 0
+        while (e < ConnectedComponents.UnionFindEdges && edges.hasNext) {
+          val (a, b) = edges.next()
+          uf.union(a, b)
+          e += 1
+        }
+      }
+    }
 }

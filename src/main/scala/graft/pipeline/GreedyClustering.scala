@@ -69,7 +69,7 @@ object GreedyClustering {
     ms.groupByKey(_.component_id)
       .cogroup(es.groupByKey(_.component_id)) { (_, mi, ei) =>
         val refs = mi.map(r => Greedy.Ref(r.mention_id, r.name, r.weight, toToks(r))).toSeq
-        val (assign, profiles, _) =
+        val (assign, profiles) =
           Greedy.clusterCore(refs, ei.map(e => (e.src, e.dst)).toSeq, hierOf(hier))
         assign.iterator.map { case (id, c) =>
           CoreOut(id, c, if (id == c) toEntryRows(profiles(c)) else Seq.empty)

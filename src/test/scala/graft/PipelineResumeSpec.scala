@@ -48,4 +48,42 @@ class PipelineResumeSpec extends SparkSpec {
     assert(recomputed.nonEmpty)
     deleteRec(wd)
   }
+
+  test("a run that fails mid-write leaves no manifest to resume on") {
+    val wd = Files.createTempDirectory("graft_crash").toString
+    val store = new graft.checkpoint.CheckpointStore(wd, spark)
+    var computed = 0
+    def good() = { computed += 1; Seq(1L, 2L, 3L).toDF("v") }
+
+    // run 1 completes the stage with fingerprint X
+    store.stage("s", "X")(good())
+    assert(store.isComplete("s", "X") && computed == 1)
+
+    // run 2 (fingerprint Y) dies while its data is being written: the
+    // overwrite has already removed X's data when the job fails
+    intercept[Exception] {
+      store.stage("s", "Y")(spark.range(3).map { i =>
+        if (i == 2L) throw new IllegalStateException("killed mid-write"); i
+      }.toDF("v"))
+    }
+    assert(!store.isComplete("s", "X"))
+
+    // run 3 with X again must recompute, not resume
+    val back = store.stage("s", "X")(good())
+    assert(computed == 2)
+    assert(back.as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(store.isComplete("s", "X") && !store.isComplete("s", "Y"))
+
+    // a compute that throws before producing a frame also drops the manifest
+    intercept[IllegalStateException] {
+      store.stage("s", "Y")(throw new IllegalStateException("compute failed"))
+    }
+    assert(!store.isComplete("s", "X"))
+
+    // the fingerprint is matched exactly, not as a substring
+    store.stage("s", "abc")(good())
+    assert(store.isComplete("s", "abc"))
+    assert(!store.isComplete("s", "ab") && !store.isComplete("s", "bc"))
+    deleteRec(wd)
+  }
 }

@@ -137,7 +137,9 @@ class PipelineSpec extends SparkSpec {
 
   test("connected components: 300-hop chain converges within the round cap") {
     // A path graph has diameter = n-1; plain min-label propagation would
-    // need 299 rounds (> maxIter 50) — the pointer-jump makes it O(log n).
+    // need 299 rounds (> maxIter 50). Union-find contraction does not
+    // depend on diameter: each task contracts its whole share of the path
+    // at once, and the cross-task links fit one union-find in round 1.
     val edges = (1L until 300L).map(i => (i, i + 1)).toDF("src", "dst")
     val comp = ConnectedComponents.run(edges)
       .as[(Long, Long)].collect().toMap

@@ -9,9 +9,8 @@ import graft.pipeline.Blocking
   * The static plan shows the tokenArrays subtree planned twice (dst/org
   * branches); AQE's runtime exchange reuse should dedupe the identical
   * shuffle stages. This probe measures (a) the production `candidates`
-  * shape, (b) a variant with the array aggregate explicitly pinned via
-  * localCheckpoint, and (c) counts how many ObjectHashAggregate rows the
-  * executed plan reports, on a K x replicated tokens table (dev aid, test
+  * shape and (b) a variant with the array aggregate explicitly pinned via
+  * localCheckpoint, on a K x replicated tokens table (dev aid, test
   * scope). args: <tokensParquet> [samples]
   */
 object DebugBlockReuse {
