@@ -35,8 +35,7 @@ object Pipeline {
     def timed(name: String, fp: String)(f: => DataFrame): DataFrame = {
       val t0 = System.nanoTime()
       val out = store.stage(name, fp)(f)
-      val rows = out.count()
-      times += StageTimes(name, (System.nanoTime() - t0) / 1e9, rows)
+      times += StageTimes(name, (System.nanoTime() - t0) / 1e9, store.rows(name))
       out
     }
 

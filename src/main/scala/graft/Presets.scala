@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Blocking, GreedyClustering, Tokenize, Canonicalize}
+import graft.pipeline.{Blocking, GreedyClustering, Tokenize}
 import graft.ops.{TextDedup, Curation, Similarity, Sampling}
 
 /** The 100-TB-SAFE configuration in one place.
@@ -61,11 +61,6 @@ object Presets {
       Blocking.candidates(tokens, blocking),
       maxComponentSize = maxComponentSize, durableDir = durableDir)
   }
-
-  /** Raw transcripts -> mention table (marker-free extraction works on
-    * unmarked text; see Canonicalize.mentionEventsAuto for that path). */
-  def mentionsOf(transcripts: DataFrame): DataFrame =
-    Canonicalize.mentions(transcripts)
 
   /** The capped shingle -> minhash -> LSH-pair chain, eagerly materialized:
     * keepSet's contract is that injected stages are ALREADY checkpointed

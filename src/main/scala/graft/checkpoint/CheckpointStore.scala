@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import scala.util.Try
+import scala.util.matching.Regex
 
 /** Per-stage checkpointing with lineage + counters (north rule: every
   * stage checkpointed with per-partition lineage and counters for full
@@ -21,10 +23,11 @@ import java.nio.charset.StandardCharsets
   * API; a real Iceberg catalog can be dropped in by reimplementing
   * write/read against `spark.table` + `snapshot_id`.
   *
-  * Resumability contract: a stage is skipped iff its manifest exists AND
-  * its recorded input fingerprint equals the current chained fingerprint
-  * (config + upstream fingerprints hashed in), making restarts idempotent
-  * and stale checkpoints self-invalidating.
+  * Resumability contract: a stage is skipped iff its manifest exists, its
+  * recorded input fingerprint equals the current chained fingerprint
+  * (config + upstream fingerprints hashed in) AND its data still counts
+  * the manifest's rows, making restarts idempotent and stale or damaged
+  * checkpoints self-invalidating.
   *
   * Crash safety: the manifest is the commit record. `write` deletes it
   * before computing or overwriting the data, and publishes the new one by
@@ -38,14 +41,17 @@ final class CheckpointStore(root: String, spark: SparkSession) {
   private def manifestPath(stage: String): Path = dir(stage).resolve("_manifest.json")
   private def dataPath(stage: String): String = dir(stage).resolve("data").toString
 
-  def isComplete(stage: String, fingerprint: String): Boolean = {
-    val p = manifestPath(stage)
-    Files.exists(p) && {
-      val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      CheckpointStore.FingerprintField.findFirstMatchIn(txt)
-        .exists(_.group(1) == fingerprint)
-    }
-  }
+  private def manifestField(stage: String, field: Regex): Option[String] =
+    Some(manifestPath(stage)).filter(Files.exists(_))
+      .flatMap(p => field.findFirstMatchIn(Files.readString(p)).map(_.group(1)))
+
+  def isComplete(stage: String, fingerprint: String): Boolean =
+    manifestField(stage, CheckpointStore.FingerprintField).contains(fingerprint)
+
+  /** The row count the stage's manifest records (counted during `write`). */
+  def rows(stage: String): Long =
+    manifestField(stage, CheckpointStore.RowsField).map(_.toLong)
+      .getOrElse(throw new IllegalStateException(s"no manifest for stage $stage"))
 
   def read(stage: String): DataFrame = spark.read.parquet(dataPath(stage))
 
@@ -82,14 +88,17 @@ final class CheckpointStore(root: String, spark: SparkSession) {
     back
   }
 
-  /** Run-or-resume: skip when the checkpoint is current, else compute. */
+  /** Run-or-resume: skip when the checkpoint is current and its data still
+    * counts the manifest's rows (a lost part file fails that), else compute. */
   def stage(name: String, fingerprint: String)(compute: => DataFrame): DataFrame =
-    if (isComplete(name, fingerprint)) read(name)
-    else write(name, compute, fingerprint)
+    Some(name).filter(isComplete(_, fingerprint))
+      .flatMap(n => Try(read(n)).filter(_.count() == rows(n)).toOption)
+      .getOrElse(write(name, compute, fingerprint))
 }
 
 object CheckpointStore {
   private val FingerprintField = """"input_fingerprint"\s*:\s*"([^"]*)"""".r
+  private val RowsField = """(?m)^\s*"rows"\s*:\s*(\d+)""".r
 
   /** Deterministic chained fingerprint (hex of 64-bit FNV-1a). */
   def fingerprint(parts: String*): String = {

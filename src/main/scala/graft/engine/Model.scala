@@ -154,10 +154,6 @@ final class Matched(var entry: ProfileEntry, val tok: Tok, val key: ElementKey) 
     * (MatchResult.java:311-314). */
   def isAbbrsMatchedInNonTokenLevel: Boolean =
     key.level > 1 && tok.isAbbr && entry.isAbbr
-
-  /** Profile upgrade trigger (MatchResult.java:321-324). */
-  def isProfileAbbrAndRefNonAbbr: Boolean =
-    entry.isAbbr && !tok.isAbbr
 }
 
 /** MatchResult (MatchResult.java). `parts` arrays are indexed by token

@@ -88,9 +88,6 @@ object StringSim {
     j + prefix * 0.1 * (1.0 - j)
   }
 
-  def jaro(a: String, b: String): Double =
-    jaroSlice(a, 0, a.length, b, 0, b.length)
-
   def jaroWinkler(a: String, b: String): Double =
     jaroWinklerSlice(a, 0, a.length, b, 0, b.length)
 

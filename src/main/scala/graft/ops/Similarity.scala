@@ -453,7 +453,7 @@ object Similarity {
     * the BROADCAST mapPartitions path ([[ivfProbesBroadcast]]): measured
     * at every centroid count it beats the literal-inlined SQL projection
     * 2-5x (sf0.1, min-of-2: nlist 16 0.26s vs 0.52s, 64 0.23s vs 0.73s,
-    * 200 0.40s vs 1.94s — `Test/runMain graft.ops.DebugIvfPath`), because
+    * 200 0.40s vs 1.94s, a one-off timing of the round-5 tree), because
     * the inline form scores cells through an interpreted higher-order
     * `transform` island while the broadcast form is a tight per-partition
     * loop; and at sqrt(n) cells a 10^6-vector corpus wants ~1000

@@ -20,7 +20,7 @@ import graft.engine._
   *    misspellings) form their own weak-edge sub-components, each again
   *    clustered with the exact engine — so matching loner pairs/chains
   *    merge exactly as the reference BFS would; (3) remaining singletons
-  *    are attached to adjacent multi-ref clusters in up to `attachRounds`
+  *    are attached to adjacent multi-ref clusters in up to `AttachRounds`
   *    parallel rounds, testing the same consistency engine against
   *    serialized cluster profiles in the reference's priority order and
   *    folding each round's attachments back into the profiles so later
@@ -95,6 +95,15 @@ object GreedyClustering {
     case _ => Hierarchy.default
   }
 
+  /** Phase-3 attachment rounds on the giant path. */
+  private val AttachRounds = 3
+
+  /** Tractability bound for phase-2 loner-loner sub-components
+    * (independent of the `maxComponentSize` giant-path trigger): weak
+    * components larger than this skip exact clustering and rely on the
+    * attachment rounds only. */
+  private val LonerComponentCap = 3000
+
   /** assignments(mention_id, name, weight, component_id, cluster_id):
     * cluster_id = BFS-seed mention of the consistency clusterer. */
   def assignments(
@@ -103,12 +112,6 @@ object GreedyClustering {
       candidates: DataFrame,
       hierarchy: String = "soundex",
       maxComponentSize: Int = 3000,
-      attachRounds: Int = 3,
-      /** Tractability bound for phase-2 loner-loner sub-components
-        * (independent of the giant-path trigger above): weak components
-        * larger than this skip exact clustering and rely on the
-        * attachment rounds only. */
-      lonerComponentCap: Int = 3000,
       /** When set, per-round attachment-loop state (assignments +
         * profiles) is persisted to parquet instead of executor-local
         * checkpoint blocks — the durable path for long-lived clusters
@@ -287,7 +290,7 @@ object GreedyClustering {
         .withColumnRenamed("id", "mention_id")
         .withColumnRenamed("component", "loner_comp")
       val compSizes = lonerComp.groupBy($"loner_comp").count()
-        .filter($"count" <= lonerComponentCap).select($"loner_comp")
+        .filter($"count" <= LonerComponentCap).select($"loner_comp")
       val boundedComp = lonerComp.join(compSizes, "loner_comp").localCheckpoint()
       val lonerMentions = bigMentions.toDF().drop("component_id")
         .join(boundedComp, "mention_id")
@@ -318,7 +321,7 @@ object GreedyClustering {
     // analogue of the reference BFS's incremental profile growth.
     var round = 0
     var done = false
-    while (round < attachRounds && !done) phase("attach") {
+    while (round < AttachRounds && !done) phase("attach") {
       assignDf = pin(assignDf, s"greedy_assign_r$round")
       profilesDf = pin(profilesDf, s"greedy_profiles_r$round")
       val sizes = assignDf.groupBy($"cluster_id").count().localCheckpoint()

@@ -49,6 +49,24 @@ class PipelineResumeSpec extends SparkSpec {
     deleteRec(wd)
   }
 
+  test("a stage that lost a data file is recomputed on resume, not trusted") {
+    val wd = Files.createTempDirectory("graft_lost_part").toString
+    def lose(stage: String) = assert(new java.io.File(s"$wd/$stage/data").listFiles()
+      .filter(_.getName.startsWith("part-")).maxBy(_.length).delete())
+    val cfg = Pipeline.Config("/root/testdata/sf0.001", wd)
+    val (t1, _) = Pipeline.run(spark, cfg)
+    lose("tokens") // its only part file at this size: the data no longer reads
+    val (t2, _) = Pipeline.run(spark, cfg)
+    assert(t2.map(t => t.name -> t.rows) === t1.map(t => t.name -> t.rows))
+    assert(spark.read.parquet(s"$wd/tokens/data").count() === t1(2).rows)
+    // one part of four lost: the data still reads but is short of the manifest
+    val store = new graft.checkpoint.CheckpointStore(wd, spark)
+    store.stage("s", "X")(spark.range(100).repartition(4).toDF())
+    lose("s")
+    assert(store.stage("s", "X")(spark.range(100).toDF()).count() === 100)
+    deleteRec(wd)
+  }
+
   test("a run that fails mid-write leaves no manifest to resume on") {
     val wd = Files.createTempDirectory("graft_crash").toString
     val store = new graft.checkpoint.CheckpointStore(wd, spark)

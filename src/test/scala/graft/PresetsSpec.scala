@@ -17,7 +17,7 @@ class PresetsSpec extends SparkSpec {
 
   test("preset ER clustering end-to-end equals the exact configuration on healthy data") {
     val transcripts = Synth.transcripts(spark, sfDir)
-    val mentions = Presets.mentionsOf(transcripts).localCheckpoint()
+    val mentions = Canonicalize.mentions(transcripts).localCheckpoint()
     val preset = Presets.clusterMentions(mentions)
       .select(col("mention_id"), col("cluster_id"))
     val tokens = Tokenize.tokens(mentions)

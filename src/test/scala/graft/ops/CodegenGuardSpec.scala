@@ -10,7 +10,7 @@ import graft.SparkSpec
   * configuration is the auto-param ceiling a ~10^6-vector corpus reaches
   * — the exact shape whose unrolled-literal formulation compiled a
   * >10k-line method and fell out of codegen (see
-  * [[graft.functions.LshSigsExpr]] and tools/DebugQuantCodegen).
+  * [[graft.functions.LshSigsExpr]]).
   * `spark.sql.codegen.fallback` is a runtime SQL conf, so it is flipped on
   * the shared session for the duration and restored after. */
 class CodegenGuardSpec extends SparkSpec {
