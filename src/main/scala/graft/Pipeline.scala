@@ -19,16 +19,25 @@ object Pipeline {
       sfDir: String,
       workDir: String,
       clusterer: String = "greedy", // greedy | cc
-      coder: String = "soundex", // soundex | metaphone
+      coder: String = "soundex", // soundex | metaphone | nysiis | onca | statcan
       commonMsgTh: Int = 1,
       relSimTh: Double = 0.5,
       maxBlockDf: Option[Long] = None)
+
+  /** The clusterers `Config.clusterer` may name. */
+  val Clusterers: Seq[String] = Seq("greedy", "cc")
 
   final case class StageTimes(name: String, seconds: Double, rows: Long)
 
   /** Runs (resuming where possible); returns per-stage wall times and the
     * final assignments DataFrame. */
   def run(spark: SparkSession, cfg: Config): (Seq[StageTimes], DataFrame) = {
+    // both names select code inside the assignments stage; check them
+    // before any stage runs, so a typo fails fast and writes nothing
+    require(Clusterers.contains(cfg.clusterer),
+      s"unknown clusterer '${cfg.clusterer}' (allowed: ${Clusterers.mkString("|")})")
+    require(GreedyClustering.Coders.contains(cfg.coder),
+      s"unknown coder '${cfg.coder}' (allowed: ${GreedyClustering.Coders.mkString("|")})")
     val store = new CheckpointStore(cfg.workDir, spark)
     val times = collection.mutable.ArrayBuffer.empty[StageTimes]
 

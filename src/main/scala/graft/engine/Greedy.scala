@@ -22,10 +22,10 @@ import scala.collection.mutable
   * O(edges x cluster-profile) and intractable. The distributed giant
   * path lives in [[graft.pipeline.GreedyClustering]]: it applies the
   * reference's own remedy — the stricter 2-common-token edge condition —
-  * to cluster family cores with [[clusterCore]], then chains and attaches
+  * to cluster family cores with [[cluster]], then chains and attaches
   * the remaining weak-edge-only refs (nickname/initial forms) through the
-  * same consistency engine. Small components always use the exact
-  * reference BFS.
+  * same consistency engine. Small components run [[cluster]] as is: it is
+  * the one BFS entry point of both paths.
   */
 object Greedy {
 
@@ -35,13 +35,10 @@ object Greedy {
   private def priority(r: Ref): Prio =
     (r.toks.length, r.toks.count(_.isAbbr), -r.weight, r.id)
 
-  /** Exact reference greedy BFS. Returns (mention_id, cluster_id = seed). */
-  def cluster(refs: Seq[Ref], edges: Seq[(Long, Long)], h: Hierarchy): Seq[(Long, Long)] =
-    clusterCore(refs, edges, h)._1
-
-  /** Core BFS that also returns each cluster's final profile (used by the
-    * giant-component attachment pass). */
-  def clusterCore(refs: Seq[Ref], edges: Seq[(Long, Long)], h: Hierarchy)
+  /** Exact reference greedy BFS. Returns (mention_id, cluster_id = seed)
+    * for every ref, and each cluster's final profile keyed by its seed
+    * (the giant-component attachment rounds test loners against them). */
+  def cluster(refs: Seq[Ref], edges: Seq[(Long, Long)], h: Hierarchy)
       : (Seq[(Long, Long)], mutable.HashMap[Long, ClusterProfile]) = {
     val byId = refs.map(r => r.id -> r).toMap
     val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]

@@ -123,18 +123,25 @@ object ConnectedComponents {
       .select(col("id"), col("label").as("component"))
   }
 
-  /** Full assignment for every mention: singletons keep their own id as
-    * component; cluster representative = max-weight member of the
-    * component (ties broken by min mention_id; reference A-6,
-    * MessagePassing.java:138). */
-  def assignments(mentions: DataFrame, candidates: DataFrame,
+  /** (mention_id, name, weight, component_id) for every mention of the
+    * candidate graph; singletons keep their own id as component. The
+    * component pre-pass of greedy clustering. */
+  def components(mentions: DataFrame, candidates: DataFrame,
       durableDir: Option[String] = None): DataFrame = {
     val comp = run(candidates.select(col("dst_id").as("src"), col("org_id").as("dst")),
       durableDir = durableDir)
-    val withComp = mentions
+    mentions
       .join(comp.withColumnRenamed("id", "mention_id"), Seq("mention_id"), "left")
-      .withColumn("component_id", coalesce(col("component"), col("mention_id")))
-      .drop("component")
+      .select(col("mention_id"), col("name"), col("weight"),
+        coalesce(col("component"), col("mention_id")).as("component_id"))
+  }
+
+  /** Full assignment for every mention: [[components]] plus the cluster
+    * representative = max-weight member of the component (ties broken by
+    * min mention_id; reference A-6, MessagePassing.java:138). */
+  def assignments(mentions: DataFrame, candidates: DataFrame,
+      durableDir: Option[String] = None): DataFrame = {
+    val withComp = components(mentions, candidates, durableDir)
     val reps = withComp
       .groupBy(col("component_id"))
       .agg(min_by(col("mention_id"),

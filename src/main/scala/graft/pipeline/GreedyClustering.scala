@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.functions._
 import graft.engine._
 
@@ -28,6 +29,19 @@ import graft.engine._
   *    (instead of per ref) is the one documented deviation that makes the
   *    giant path shuffle-parallel at any scale; small components keep
   *    bit-exact reference semantics.
+  *
+  * One routine runs every exact clustering: `exactCluster` cogroups
+  * mentions and edges by group and runs [[graft.engine.Greedy.cluster]] on
+  * each group. The small path groups by component. Phases (1) and (2)
+  * share one sub-component routine: connected components over an edge
+  * subset label the groups, a mention without a group is its own, and
+  * phase (2) first drops the groups above `LonerComponentCap`.
+  *
+  * Control flow reads observations, not extra jobs: whether any component
+  * exceeds `maxComponentSize`, and whether an attachment round proposed
+  * anything, are row counts observed on the checkpoint that materializes
+  * the frame in question (the `Observation` pattern of
+  * [[ConnectedComponents.run]]).
   */
 object GreedyClustering {
 
@@ -41,24 +55,27 @@ object GreedyClustering {
       is_before_dot: Boolean, name_part: Int, ord: Int)
   final case class CoreOut(mention_id: Long, cluster_id: Long,
       profile: Seq[EntryRow])
-  final case class LonerWork(loner: MentionRow,
-      cands: Seq[(Long, Seq[EntryRow], (Int, Int, Long, Long))])
   final case class ProfRow(cluster_id: Long, profile: Seq[EntryRow])
   final case class FoldOut(cluster_id: Long, profile: Seq[EntryRow],
       accepted: Seq[Long])
   final case class AttachToks(cluster_id: Long, mention_id: Long,
       weight: Long, toks: Seq[TokRow])
+  /** The reference's seed/visit order key (MessagePassing.java:158-162):
+    * (token count, abbreviated-token count, -weight, mention_id). */
+  type Prio = (Int, Int, Long, Long)
+  /** One attachment proposal: a loner, an adjacent cluster, the cluster's
+    * best neighbour priority and the cluster's profile. */
+  final case class LonerCand(loner_id: Long, cluster_id: Long, prio: Prio,
+      profile: Seq[EntryRow])
 
-  private def toToks(m: MentionRow): Array[Tok] =
-    m.toks.sortBy(_.pos).map(t => new Tok(t.token, t.pos, t.is_abbr,
+  /** The phonetic coders `hierarchy` may name. */
+  val Coders: Seq[String] = Seq("soundex", "metaphone", "nysiis", "onca", "statcan")
+
+  private def toToks(toks: Seq[TokRow]): Array[Tok] =
+    toks.sortBy(_.pos).map(t => new Tok(t.token, t.pos, t.is_abbr,
       t.is_before_dot, NamePart.fromString(t.name_part))).toArray
 
-  private def toToksRows(rows: Seq[TokRow]): Array[Tok] =
-    rows.sortBy(_.pos).map(t => new Tok(t.token, t.pos, t.is_abbr,
-      t.is_before_dot, NamePart.fromString(t.name_part))).toArray
-
-  /** The reference's seed/visit order key (MessagePassing.java:158-162). */
-  private def prioOfToks(toks: Seq[TokRow], weight: Long, id: Long): (Int, Int, Long, Long) =
+  private def prioOfToks(toks: Seq[TokRow], weight: Long, id: Long): Prio =
     (toks.length, toks.count(_.is_abbr), -weight, id)
 
   /** Exact reference BFS per component via typed cogroup; emits each ref's
@@ -68,9 +85,9 @@ object GreedyClustering {
     import ms.sparkSession.implicits._
     ms.groupByKey(_.component_id)
       .cogroup(es.groupByKey(_.component_id)) { (_, mi, ei) =>
-        val refs = mi.map(r => Greedy.Ref(r.mention_id, r.name, r.weight, toToks(r))).toSeq
+        val refs = mi.map(r => Greedy.Ref(r.mention_id, r.name, r.weight, toToks(r.toks))).toSeq
         val (assign, profiles) =
-          Greedy.clusterCore(refs, ei.map(e => (e.src, e.dst)).toSeq, hierOf(hier))
+          Greedy.cluster(refs, ei.map(e => (e.src, e.dst)).toSeq, hierOf(hier))
         assign.iterator.map { case (id, c) =>
           CoreOut(id, c, if (id == c) toEntryRows(profiles(c)) else Seq.empty)
         }
@@ -88,11 +105,11 @@ object GreedyClustering {
         r.name_part, r.ord))))
 
   private def hierOf(name: String): Hierarchy = name match {
+    case "soundex" => Hierarchy.default
     case "metaphone" => Hierarchy.metaphone
     case "nysiis" => Hierarchy.nysiis
     case "onca" => Hierarchy.onca
     case "statcan" => Hierarchy.statcan
-    case _ => Hierarchy.default
   }
 
   /** Phase-3 attachment rounds on the giant path. */
@@ -125,16 +142,19 @@ object GreedyClustering {
         * instead of the caller's final action; values are identical
         * either way. None (the default) changes nothing. */
       phaseSink: Option[(String, Double) => Unit] = None,
-      /** Precomputed (already materialized) ConnectedComponents.assignments
-        * over the SAME (mentions, candidates) — a pipeline that has run the
-        * CC stage for its own output (the Queries memoizer, any caller
-        * publishing both clusterings) injects it here so the iterative CC
-        * loop runs once per pipeline instead of once per consumer
-        * (round-6 change, guide §2.4: shared stage, identical values by
-        * construction). None recomputes internally, as before. */
+      /** Precomputed (already materialized) components over the SAME
+        * (mentions, candidates): [[ConnectedComponents.components]] or the
+        * CC stage's assignments. A pipeline that has run the CC stage for
+        * its own output (the Queries memoizer, any caller publishing both
+        * clusterings) injects it here so the iterative CC loop runs once
+        * per pipeline instead of once per consumer (round-6 change, guide
+        * §2.4: shared stage, identical values by construction). None
+        * recomputes internally, as before. */
       ccDf: Option[DataFrame] = None): DataFrame = {
     val spark = mentions.sparkSession
     import spark.implicits._
+    require(Coders.contains(hierarchy),
+      s"unknown coder '$hierarchy' (allowed: ${Coders.mkString("|")})")
 
     def phase[T](name: String)(f: => T): T = phaseSink match {
       case Some(sink) =>
@@ -153,28 +173,28 @@ object GreedyClustering {
       case None => df.localCheckpoint()
     }
 
-    // pin the inputs for the multi-pass consumption below — but skip the
-    // copy when the caller already hands a MATERIALIZED frame (a bare
-    // localCheckpoint / checkpoint scan analyzes to a LogicalRDD): the
-    // Queries memoizer and Bench's clusterStages both pass checkpointed
-    // candidates, and re-checkpointing copied the full pair table again
-    // (round 6, guide §1.2: don't compute things twice)
-    def pinInput(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _ => df.localCheckpoint()
+    // checkpoints `df` and returns its row count, observed on the
+    // checkpoint's own job instead of a count job of its own
+    def counted(df: DataFrame): (DataFrame, Long) = {
+      val obs = Observation()
+      val out = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint()
+      (out, obs.get("rows").asInstanceOf[Long])
     }
-    val m = pinInput(mentions)
-    val cand = pinInput(candidates)
 
-    val cc = phase("cc")(ccDf match {
-      case Some(pre) => pre
-        .select($"mention_id", $"name", $"weight", $"component_id")
-        .localCheckpoint()
-      case None =>
-        ConnectedComponents.assignments(m, cand, durableDir.map(_ + "/cc"))
-          .select($"mention_id", $"name", $"weight", $"component_id")
-          .localCheckpoint()
-    })
+    // pin the candidates for the two passes below (CC and edges) — but
+    // skip the copy when the caller already hands a MATERIALIZED frame: a
+    // bare localCheckpoint / checkpoint or a parquet scan (the Pipeline's
+    // CheckpointStore stages) analyzes to a leaf, and copying it again
+    // would only duplicate the pair table. Mentions are read once.
+    val cand = candidates.queryExecution.analyzed match {
+      case _: LeafNode => candidates
+      case _ => candidates.localCheckpoint()
+    }
+
+    val cc = phase("cc")(ccDf
+      .map(_.select($"mention_id", $"name", $"weight", $"component_id"))
+      .getOrElse(ConnectedComponents.components(mentions, cand, durableDir.map(_ + "/cc")))
+      .localCheckpoint())
 
     val mentionToks: Dataset[MentionRow] = phase("prep")(tokens
       .groupBy($"mention_id")
@@ -196,79 +216,66 @@ object GreedyClustering {
       .as[EdgeRow]
       .localCheckpoint())
 
-    val bigComps = phase("prep")(cc.groupBy($"component_id").count()
-      .filter($"count" > maxComponentSize)
-      .select($"component_id").localCheckpoint())
-    // one job on the checkpointed frame (isEmpty on an empty result
-    // escalates through several limit-scan jobs); resolved HERE so the
-    // common no-giant case also skips the two anti-join stages below
-    // (round 6 — with zero oversized components the anti-joins are
-    // identity filters)
-    val noBig = bigComps.count() == 0L
-
-    val hier = hierarchy
+    // the count rides the checkpoint's job; resolved HERE so the common
+    // no-giant case also skips the two anti-join stages below (with zero
+    // oversized components they are identity filters)
+    val (bigComps, nBig) = phase("prep")(counted(cc.groupBy($"component_id").count()
+      .filter($"count" > maxComponentSize).select($"component_id")))
+    val noBig = nBig == 0L
 
     // ---- exact reference path for normally-sized components
-    val smallMentions = (if (noBig) mentionToks
-      else mentionToks.join(bigComps, Seq("component_id"), "left_anti"))
-      .as[MentionRow]
-    val smallEdges = (if (noBig) edges
-      else edges.join(bigComps, Seq("component_id"), "left_anti"))
-      .as[EdgeRow]
-    val smallAssignsLazy: Dataset[AssignRow] = smallMentions
-      .groupByKey(_.component_id)
-      .cogroup(smallEdges.groupByKey(_.component_id)) { (_, ms, es) =>
-        val refs = ms.map(r => Greedy.Ref(r.mention_id, r.name, r.weight, toToks(r))).toSeq
-        Greedy.cluster(refs, es.map(e => (e.src, e.dst)).toSeq, hierOf(hier))
-          .iterator.map { case (id, c) => AssignRow(id, c) }
-      }
+    val small = exactCluster(
+      (if (noBig) mentionToks
+        else mentionToks.join(bigComps, Seq("component_id"), "left_anti")).as[MentionRow],
+      (if (noBig) edges
+        else edges.join(bigComps, Seq("component_id"), "left_anti")).as[EdgeRow],
+      hierarchy).toDF().select($"mention_id", $"cluster_id")
     // instrumented runs force the small path here so its wall time lands
     // in the "small" phase; the production path stays lazy (one less
     // materialization — the caller's action computes it in-stream)
-    val smallAssigns: Dataset[AssignRow] =
-      if (phaseSink.isDefined) phase("small")(smallAssignsLazy.localCheckpoint())
-      else smallAssignsLazy
+    val smallAssigns =
+      if (phaseSink.isDefined) phase("small")(small.localCheckpoint()) else small
 
     // ---- distributed giant-component path (skipped entirely when no
     // component exceeds the cap — the common case at moderate scale)
-    val bigAssigns: Dataset[AssignRow] = if (noBig)
-      spark.emptyDataset[AssignRow]
+    val bigAssigns: DataFrame = if (noBig) spark.emptyDataset[AssignRow].toDF()
     else {
-    val (bigMentions, bigEdges, coreOutDf) = phase("core") {
-    val bigMentions = mentionToks.join(bigComps, Seq("component_id")).as[MentionRow]
-      .localCheckpoint()
-    val bigEdges = edges.join(bigComps, Seq("component_id")).as[EdgeRow]
-      .localCheckpoint()
+    // connected components of the edge subset `sub` (src, dst, ...) as
+    // (mention_id, group)
+    def groupsOf(sub: DataFrame, name: String): DataFrame =
+      ConnectedComponents.run(sub.select($"src", $"dst"),
+        durableDir = durableDir.map(_ + s"/$name"))
+        .select($"id".as("mention_id"), $"component".as("group"))
 
-    // strong-edge sub-components, clustered exactly, profiles exported
-    val strong = bigEdges.filter(_.common_cnt >= 2)
-    val coreCompDf = ConnectedComponents.run(strong.toDF()
-      .select($"src", $"dst"), durableDir = durableDir.map(_ + "/cc_strong"))
-      .withColumnRenamed("id", "mention_id")
-      .withColumnRenamed("component", "core_comp")
-    val bigWithCore = bigMentions.toDF()
-      .join(coreCompDf, Seq("mention_id"), "left")
-      .withColumn("core_comp", coalesce($"core_comp", $"mention_id"))
-    val strongByCore = strong.toDF()
-      .join(coreCompDf.withColumnRenamed("mention_id", "src"), "src")
-      .select($"core_comp", $"src", $"dst", $"common_cnt")
+    // exact BFS per sub-component: `groups` labels the sub-components of
+    // the edge subset `sub`; `ms` is the mentions to cluster, with their
+    // `group` joined on (a mention without one is its own sub-component)
+    def exactSub(ms: DataFrame, sub: DataFrame, groups: DataFrame): DataFrame =
+      exactCluster(
+        ms.select($"mention_id", $"name", $"weight",
+            coalesce($"group", $"mention_id").as("component_id"), $"toks")
+          .as[MentionRow],
+        sub.join(groups.withColumnRenamed("mention_id", "src"), "src")
+          .select($"group".as("component_id"), $"src", $"dst", $"common_cnt")
+          .as[EdgeRow],
+        hierarchy).toDF().localCheckpoint()
 
-    val coreOut = exactCluster(
-      bigWithCore
-        .select($"mention_id", $"name", $"weight", $"core_comp".as("component_id"), $"toks")
-        .as[MentionRow],
-      strongByCore
-        .select($"core_comp".as("component_id"), $"src", $"dst",
-          $"common_cnt".cast("int").as("common_cnt"))
-        .as[EdgeRow],
-      hier)
-    (bigMentions, bigEdges, coreOut.toDF().localCheckpoint())
+    // ---- phase 1: strong-edge sub-components, clustered exactly, profiles
+    // exported
+    val (bigMentions, bigEdges, coreOut) = phase("core") {
+      val bigMentions = mentionToks.join(bigComps, Seq("component_id"))
+        .as[MentionRow].localCheckpoint()
+      val bigEdges = edges.join(bigComps, Seq("component_id")).localCheckpoint()
+      val strong = bigEdges.filter($"common_cnt" >= 2)
+      val groups = groupsOf(strong, "cc_strong")
+      (bigMentions, bigEdges, exactSub(
+        bigMentions.toDF().join(groups, Seq("mention_id"), "left"), strong, groups))
     }
 
     // running state: assignment (mention -> cluster) and per-cluster final
     // profiles (seed rows carry them)
-    var assignDf = coreOutDf.select($"mention_id", $"cluster_id")
-    var profilesDf = coreOutDf.filter($"mention_id" === $"cluster_id")
+    var assignDf = coreOut.select($"mention_id", $"cluster_id")
+    var profilesDf = coreOut.filter($"mention_id" === $"cluster_id")
       .select($"cluster_id", $"profile")
 
     // ---- phase 2: loner-loner chaining. Refs left in singleton clusters
@@ -281,28 +288,16 @@ object GreedyClustering {
       val sizes = assignDf.groupBy($"cluster_id").count()
       val singles = assignDf.join(sizes.filter($"count" === 1), "cluster_id")
         .select($"mention_id").localCheckpoint()
-      val lonerEdges = bigEdges.toDF()
+      val lonerEdges = bigEdges
         .join(singles.withColumnRenamed("mention_id", "src"), "src")
         .join(singles.withColumnRenamed("mention_id", "dst"), "dst")
         .localCheckpoint()
-      val lonerComp = ConnectedComponents.run(lonerEdges.select($"src", $"dst"),
-        durableDir = durableDir.map(_ + "/cc_loner"))
-        .withColumnRenamed("id", "mention_id")
-        .withColumnRenamed("component", "loner_comp")
-      val compSizes = lonerComp.groupBy($"loner_comp").count()
-        .filter($"count" <= LonerComponentCap).select($"loner_comp")
-      val boundedComp = lonerComp.join(compSizes, "loner_comp").localCheckpoint()
-      val lonerMentions = bigMentions.toDF().drop("component_id")
-        .join(boundedComp, "mention_id")
-        .select($"mention_id", $"name", $"weight", $"loner_comp".as("component_id"), $"toks")
-        .as[MentionRow]
-      val lonerEdgesByComp = lonerEdges
-        .join(boundedComp.withColumnRenamed("mention_id", "src"), "src")
-        .select($"loner_comp".as("component_id"), $"src", $"dst",
-          $"common_cnt".cast("int").as("common_cnt"))
-        .as[EdgeRow]
-      val lonerOut = exactCluster(lonerMentions, lonerEdgesByComp, hier)
-        .toDF().localCheckpoint()
+      val groups = groupsOf(lonerEdges, "cc_loner")
+      val bounded = groups.join(groups.groupBy($"group").count()
+        .filter($"count" <= LonerComponentCap).select($"group"), "group")
+        .localCheckpoint()
+      val lonerOut = exactSub(bigMentions.toDF().join(bounded, "mention_id"),
+        lonerEdges, bounded)
       val lonerIds = lonerOut.select($"mention_id")
       assignDf = assignDf.join(lonerIds, Seq("mention_id"), "left_anti")
         .unionByName(lonerOut.select($"mention_id", $"cluster_id"))
@@ -328,7 +323,7 @@ object GreedyClustering {
       val singles = assignDf.join(sizes.filter($"count" === 1), "cluster_id")
         .select($"mention_id")
       val multiClusters = sizes.filter($"count" > 1).select($"cluster_id")
-      val adj = bigEdges.toDF()
+      val adj = bigEdges
         .select(explode(array(
           struct($"src".as("a"), $"dst".as("b")),
           struct($"dst".as("a"), $"src".as("b")))).as("e"))
@@ -337,39 +332,34 @@ object GreedyClustering {
         .join(assignDf.select($"mention_id".as("nbr"), $"cluster_id"), "nbr")
         .join(multiClusters, "cluster_id")
         .filter($"cluster_id" =!= $"loner_id")
+      // the neighbour's Prio, as a struct whose fields decode as the tuple
       val nbrPrio = bigMentions.toDF().select($"mention_id".as("nbr"),
-        size($"toks").as("p1"),
-        expr("size(filter(toks, t -> t.is_abbr))").as("p2"),
-        (-$"weight").as("p3"), $"mention_id".as("p4"))
+        size($"toks").as("_1"),
+        expr("size(filter(toks, t -> t.is_abbr))").as("_2"),
+        (-$"weight").as("_3"), $"mention_id".as("_4"))
       val lonerCands = adj.join(nbrPrio, "nbr")
         .groupBy($"loner_id", $"cluster_id")
-        .agg(min(struct($"p1", $"p2", $"p3", $"p4")).as("prio"))
+        .agg(min(struct($"_1", $"_2", $"_3", $"_4")).as("prio"))
         .join(profilesDf, "cluster_id")
         .select($"loner_id", $"cluster_id", $"prio", $"profile")
+        .as[LonerCand]
 
-      val attach: Dataset[AssignRow] = bigMentions
+      // each loner proposes the first adjacent cluster, in priority order,
+      // whose profile it is consistent with
+      val attach = bigMentions
         .joinWith(lonerCands, bigMentions("mention_id") === lonerCands("loner_id"))
         .groupByKey(_._1.mention_id)
-        .flatMapGroups { (_, it) =>
+        .flatMapGroups { (id, it) =>
           val rows = it.toSeq
-          val m0 = rows.head._1
-          val h = hierOf(hier)
-          val toks = toToks(m0).toSeq
-          val ordered = rows.map(_._2)
-            .sortBy(r => (r.getStruct(2).getInt(0), r.getStruct(2).getInt(1),
-              r.getStruct(2).getLong(2), r.getStruct(2).getLong(3)))
-          val chosen = ordered.iterator.map { r =>
-            val prof = fromEntryRows(r.getSeq[org.apache.spark.sql.Row](3)
-              .map(x => EntryRow(x.getString(0), x.getBoolean(1), x.getBoolean(2),
-                x.getInt(3), x.getInt(4))))
-            val res = prof.matchRef(h, toks)
-            if (res.isConsistent || res.canBecomeConsistent) Some(r.getLong(1))
-            else None
-          }.collectFirst { case Some(c) => c }
-          chosen.iterator.map(c => AssignRow(m0.mention_id, c))
+          val h = hierOf(hierarchy)
+          val toks = toToks(rows.head._1.toks).toSeq
+          rows.map(_._2).sortBy(_.prio).find { c =>
+            val res = fromEntryRows(c.profile).matchRef(h, toks)
+            res.isConsistent || res.canBecomeConsistent
+          }.iterator.map(c => AssignRow(id, c.cluster_id))
         }
-      val attachDf = attach.toDF().localCheckpoint()
-      if (attachDf.isEmpty) done = true
+      val (attachDf, proposed) = counted(attach.toDF())
+      if (proposed == 0L) done = true
       else {
         // Fold the PROPOSED refs into their clusters' profiles and emit the
         // final assignments FROM the fold: an attachment only commits if its
@@ -381,8 +371,7 @@ object GreedyClustering {
           .join(bigMentions.toDF().select($"mention_id", $"weight", $"toks"), "mention_id")
           .select($"cluster_id", $"mention_id", $"weight", $"toks")
           .as[AttachToks]
-        val profs = profilesDf.as[ProfRow]
-        val folded = profs.groupByKey(_.cluster_id)
+        val folded = profilesDf.as[ProfRow].groupByKey(_.cluster_id)
           .cogroup(attachToks.groupByKey(_.cluster_id)) { (k, ps, as) =>
             val pSeq = ps.toSeq
             if (pSeq.isEmpty) Iterator.empty
@@ -390,11 +379,11 @@ object GreedyClustering {
               val aSeq = as.toSeq
               if (aSeq.isEmpty) Iterator.single(FoldOut(k, pSeq.head.profile, Seq.empty))
               else {
-                val h = hierOf(hier)
+                val h = hierOf(hierarchy)
                 val prof = fromEntryRows(pSeq.head.profile)
                 val accepted = Seq.newBuilder[Long]
                 for (a <- aSeq.sortBy(x => prioOfToks(x.toks, x.weight, x.mention_id))) {
-                  val res = prof.matchRef(h, toToksRows(a.toks).toSeq)
+                  val res = prof.matchRef(h, toToks(a.toks).toSeq)
                   if (res.isConsistent || res.canBecomeConsistent) {
                     prof.merge(res)
                     accepted += a.mention_id
@@ -404,24 +393,23 @@ object GreedyClustering {
               }
             }
           }.toDF().localCheckpoint()
+        // never empty when proposals exist: each cluster's first proposal is
+        // re-tested against the very profile it was proposed against
+        // (matchRef does not mutate; one profile row per cluster)
         val acceptedDf = folded
           .select(explode($"accepted").as("mention_id"), $"cluster_id")
-        if (acceptedDf.isEmpty) done = true
-        else {
-          assignDf = assignDf
-            .join(acceptedDf.select($"mention_id"), Seq("mention_id"), "left_anti")
-            .unionByName(acceptedDf)
-          profilesDf = folded.select($"cluster_id", $"profile")
-        }
+        assignDf = assignDf
+          .join(acceptedDf.select($"mention_id"), Seq("mention_id"), "left_anti")
+          .unionByName(acceptedDf)
+        profilesDf = folded.select($"cluster_id", $"profile")
       }
       round += 1
     }
 
-    assignDf.as[AssignRow]
+    assignDf
     }
 
-    val all = smallAssigns.toDF().unionByName(bigAssigns.toDF())
-    cc.join(all, "mention_id")
+    cc.join(smallAssigns.unionByName(bigAssigns), "mention_id")
       .select($"mention_id", $"name", $"weight", $"component_id", $"cluster_id")
   }
 }

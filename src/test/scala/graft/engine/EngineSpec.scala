@@ -176,7 +176,7 @@ class EngineSpec extends AnyFunSuite {
       ref(3, 2, "j.:FIRSTNAME", "lee:MIDDLENAME", "smith:LASTNAME"),
       ref(4, 1, "mary:FIRSTNAME", "smith:LASTNAME"))
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 4L))
-    val out = Greedy.cluster(refs, edges, h).toMap
+    val out = Greedy.cluster(refs, edges, h)._1.toMap
     assert(out(1L) === 1L && out(2L) === 1L && out(3L) === 1L)
     assert(out(4L) === 4L) // mary != john: inconsistent, seeds its own
   }

@@ -72,7 +72,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("every ref is assigned exactly once and cluster ids are member ids") {
     forAll(genRefs) { refs =>
-      val out = Greedy.cluster(refs, allPairs(refs), h)
+      val out = Greedy.cluster(refs, allPairs(refs), h)._1
       assert(out.map(_._1).sorted === refs.map(_.id).sorted)
       val ids = refs.map(_.id).toSet
       assert(out.forall { case (_, c) => ids.contains(c) })
@@ -81,8 +81,8 @@ class PropertySpec extends AnyFunSuite {
 
   test("clustering is invariant under input row order") {
     forAll(genRefs) { refs =>
-      val base = Greedy.cluster(refs, allPairs(refs), h).toMap
-      val shuffled = Greedy.cluster(refs.reverse, allPairs(refs).reverse, h).toMap
+      val base = Greedy.cluster(refs, allPairs(refs), h)._1.toMap
+      val shuffled = Greedy.cluster(refs.reverse, allPairs(refs).reverse, h)._1.toMap
       assert(base === shuffled)
     }
   }

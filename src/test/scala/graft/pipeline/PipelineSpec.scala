@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Unit specs for the DataFrame stages over tiny in-memory inputs with
@@ -157,13 +158,34 @@ class PipelineSpec extends SparkSpec {
       graft.synth.Synth.transcripts(spark, "/root/testdata/sf0.001")).localCheckpoint()
     val t = Tokenize.tokens(m).localCheckpoint()
     val c = Blocking.candidates(t).localCheckpoint()
-    def partition(maxSize: Int) =
+    def partition(m: DataFrame, t: DataFrame, c: DataFrame, maxSize: Int) =
       GreedyClustering.assignments(m, t, c, maxComponentSize = maxSize)
         .select($"mention_id", $"cluster_id").as[(Long, Long)].collect()
         .groupBy(_._2).values.map(_.map(_._1).sorted.toSeq).toSet
-    val exact = partition(Int.MaxValue)
-    val giant = partition(2)
-    assert(giant === exact)
+    val exact = partition(m, t, c, Int.MaxValue)
+    assert(partition(m, t, c, 2) === exact)
+    // the same from parquet scans, the Pipeline's input shape (its
+    // CheckpointStore stages), which the stage reads without copying
+    val dir = java.nio.file.Files.createTempDirectory("greedy_parquet").toString
+    def scan(df: DataFrame, name: String) = {
+      df.write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    assert(partition(scan(m, "m"), scan(t, "t"), scan(c, "c"), 2) === exact)
+  }
+
+  test("pipeline rejects unknown clusterer and coder names before any stage") {
+    for ((clusterer, coder, allowed) <- Seq(("CC", "soundex", "greedy|cc"),
+        ("greedy", "metafone", "soundex|metaphone|nysiis|onca|statcan"))) {
+      // no corpus at sfDir: the names must be rejected before a stage reads it
+      val wd = java.nio.file.Files.createTempDirectory("graft_names").toString
+      val e = intercept[IllegalArgumentException](graft.Pipeline.run(spark,
+        graft.Pipeline.Config(s"$wd/no_corpus", wd, clusterer, coder)))
+      assert(e.getMessage.contains(allowed))
+      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(wd))
+      try assert(!written.anyMatch(_.getFileName.toString == "_manifest.json"))
+      finally written.close()
+    }
   }
 
   test("greedy attach loop: durable pinning is output-identical and persists rounds") {
