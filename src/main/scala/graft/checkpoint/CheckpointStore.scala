@@ -1,21 +1,26 @@
 package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.util.Try
 import scala.util.matching.Regex
 
 /** Per-stage checkpointing with lineage + counters (north rule: every
-  * stage checkpointed with per-partition lineage and counters for full
-  * resumability).
+  * stage checkpointed with lineage and per-part-file row counters for
+  * full resumability).
   *
   * Layout per stage under `root`:
   *   <root>/<stage>/data/          partitioned parquet
   *   <root>/<stage>/_manifest.json stage, input fingerprint, snapshot id,
-  *                                 row count, per-partition row counters,
+  *                                 row count, per-part-file row counters,
   *                                 wall time
+  *
+  * Counting runs no Spark job: the row counts are read on the driver from
+  * the footers of the `part-*` files the write committed (one file per
+  * write task), so they describe the write itself.
   *
   * This emulates an Iceberg-style snapshot manifest: no Iceberg runtime
   * jar exists in this offline environment (SURVEY.md §7.4), so the layout
@@ -25,9 +30,9 @@ import scala.util.matching.Regex
   *
   * Resumability contract: a stage is skipped iff its manifest exists, its
   * recorded input fingerprint equals the current chained fingerprint
-  * (config + upstream fingerprints hashed in) AND its data still counts
-  * the manifest's rows, making restarts idempotent and stale or damaged
-  * checkpoints self-invalidating.
+  * (config + upstream fingerprints hashed in) AND its part-file footers
+  * still sum to the manifest's rows, making restarts idempotent and stale
+  * or damaged checkpoints self-invalidating.
   *
   * Crash safety: the manifest is the commit record. `write` deletes it
   * before computing or overwriting the data, and publishes the new one by
@@ -64,12 +69,10 @@ final class CheckpointStore(root: String, spark: SparkSession) {
     Files.deleteIfExists(manifestPath(stage))
     df.write.mode("overwrite").parquet(dataPath(stage))
     val back = read(stage)
-    val partCounts = back.groupBy(spark_partition_id().as("p"))
-      .count().orderBy(col("p"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val rows = partCounts.map(_._2).sum
+    val parts = partRows(stage)
+    val rows = parts.map(_._2).sum
     val wallMs = (System.nanoTime() - t0) / 1000000
-    val counters = partCounts.map { case (p, c) => s"""{"partition": $p, "rows": $c}""" }
+    val counters = parts.map { case (f, c) => s"""{"file": "$f", "rows": $c}""" }
       .mkString("[", ", ", "]")
     val manifest =
       s"""{
@@ -77,7 +80,7 @@ final class CheckpointStore(root: String, spark: SparkSession) {
          |  "input_fingerprint": "$fingerprint",
          |  "snapshot_id": "${stage}_${fingerprint}",
          |  "rows": $rows,
-         |  "partitions": ${partCounts.length},
+         |  "partitions": ${parts.length},
          |  "partition_counters": $counters,
          |  "write_wall_ms": $wallMs
          |}""".stripMargin
@@ -88,11 +91,29 @@ final class CheckpointStore(root: String, spark: SparkSession) {
     back
   }
 
-  /** Run-or-resume: skip when the checkpoint is current and its data still
-    * counts the manifest's rows (a lost part file fails that), else compute. */
+  /** (file name, row count) of every `part-*` parquet file under the
+    * stage's `data/`, from the file footers on the driver — no Spark job.
+    * Throws when `data/` is missing or a footer cannot be read. */
+  private def partRows(stage: String): Seq[(String, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = Option(new java.io.File(dataPath(stage)).listFiles())
+      .getOrElse(throw new java.io.FileNotFoundException(dataPath(stage)))
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
+    files.map { f =>
+      val in = HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI), conf)
+      val r = ParquetFileReader.open(in)
+      try (f.getName, r.getRecordCount) finally r.close()
+    }
+  }
+
+  /** Run-or-resume: skip when the checkpoint is current and its part-file
+    * footers still sum to the manifest's rows (a lost or unreadable part
+    * file, or a missing `data/`, fails that), else compute. */
   def stage(name: String, fingerprint: String)(compute: => DataFrame): DataFrame =
     Some(name).filter(isComplete(_, fingerprint))
-      .flatMap(n => Try(read(n)).filter(_.count() == rows(n)).toOption)
+      .filter(n => Try(partRows(n).map(_._2).sum).toOption.contains(rows(n)))
+      .flatMap(n => Try(read(n)).toOption)
       .getOrElse(write(name, compute, fingerprint))
 }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Similarity search over the `embeddings` table
   * (vec_id, embedding float[], label).
@@ -23,6 +24,62 @@ object Similarity {
   private def reg(df: DataFrame): Unit =
     graft.functions.GraftFunctions.register(df.sparkSession)
 
+  /** Spark's round(_, 6) on a double cosine: BigDecimal HALF_UP on finite
+    * values, while NaN and infinities pass through as Spark's round passes
+    * them (BigDecimal.valueOf would throw on them). The one rounding every
+    * typed fold here and [[graft.streaming.StreamingNearDup.cosine6]] use,
+    * so they stay value-identical to the SQL `round(..., 6)`. */
+  private[graft] def round6(x: Double): Double =
+    if (java.lang.Double.isFinite(x))
+      java.math.BigDecimal.valueOf(x)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    else x
+
+  /** Index-order double folds — bit-identical to graft_norm_f / graft_dot_f
+    * on the same (widened) elements. `dotOf` reads `a.length` elements. */
+  private def normOf(v: Array[Double]): Double = {
+    var acc = 0d; var i = 0
+    while (i < v.length) { acc += v(i) * v(i); i += 1 }
+    math.sqrt(acc)
+  }
+  private def dotOf(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0d; var i = 0
+    while (i < a.length) { d += a(i) * b(i); i += 1 }
+    d
+  }
+
+  /** Spark SQL's double total order (SQLOrderingUtil.compareDoubles):
+    * -0.0 == 0.0, NaN greater than everything and equal to itself. [[TopK]]
+    * ranks with it, so every top-k fold orders NaN and signed-zero
+    * cosines exactly like the row_number() window it replaces (NaN first
+    * under `cosine DESC`). */
+  @inline private def cmpD(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** The bounded top-k insertion fold behind [[knnBrute]], [[topKRanked]]
+    * and [[ivfTopKFrom]]: keeps the first `k` offers in (cosine desc under
+    * [[cmpD]], id asc) order — row_number() semantics over that order, in
+    * O(offers x k) with no sort buffer. */
+  private final class TopK(k: Int) {
+    private val cos = new Array[Double](k)
+    private val ids = new Array[Long](k)
+    private var m = 0
+    def offer(c: Double, id: Long): Unit = {
+      var p = m
+      while (p > 0 && { val o = cmpD(cos(p - 1), c)
+        o < 0 || (o == 0 && ids(p - 1) > id) }) p -= 1
+      if (p < k) {
+        var q = math.min(m, k - 1)
+        while (q > p) { cos(q) = cos(q - 1); ids(q) = ids(q - 1); q -= 1 }
+        cos(p) = c; ids(p) = id
+        if (m < k) m += 1
+      }
+    }
+    /** (vid, id, cosine, rank) rows, ranks 1..m. */
+    def ranked(vid: Long): Iterator[(Long, Long, Double, Int)] =
+      Iterator.tabulate(m)(r => (vid, ids(r), cos(r), r + 1))
+  }
+
   /** Brute-force cosine top-k: (vec_id, neighbor_id, cosine, rank).
     *
     * STILL the deliberately quadratic correctness baseline (O(n^2) dot
@@ -30,32 +87,28 @@ object Similarity {
     * but the round-6 shape removes everything except that quadratic core:
     * the corpus rides ONE executor broadcast (the same bytes the round-5
     * crossJoin's BroadcastNestedLoopJoin already shipped to every
-    * executor) and each row folds its top-k in a bounded insertion array
-    * inside one mapPartitions scan — no n^2-row join materialization, no
-    * window shuffle, no O(n log n) per-group sort (guide §2.4: remove
-    * shuffles outright; the window existed only to rank rows we then
-    * threw away). Arithmetic is bit-identical to the crossJoin form:
-    * elements widen to double before multiply (= graft_dot_f /
-    * graft_norm_f), cosine rounds via BigDecimal HALF_UP (= Spark
-    * round(_, 6)), ranks order by (cosine desc, neighbor_id asc).
-    * Corrupt rows (NULL id/embedding/element, zero norm) are dropped on
-    * both sides — the same degrade-don't-crash contract as
+    * executor) and each row folds its top-k in a [[TopK]] inside one
+    * mapPartitions scan — no n^2-row join materialization, no window
+    * shuffle, no O(n log n) per-group sort (guide §2.4: remove shuffles
+    * outright; the window existed only to rank rows we then threw away).
+    * Arithmetic is bit-identical to the crossJoin form: elements widen to
+    * double once (an exact cast, = graft_dot_f / graft_norm_f), cosine
+    * rounds via [[round6]], ranks order by (cosine desc, neighbor_id asc).
+    * Corrupt rows (NULL id/embedding/element, a norm that is not > 0:
+    * zero, or NaN from a NaN element) are dropped on both sides, as query
+    * and as neighbor — the same degrade-don't-crash contract as
     * [[ivfProbesBroadcast]]; a ragged corpus still fails fast. */
   def knnBrute(embeddings: DataFrame, k: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val raw = embeddings.select(col("vec_id"), col("embedding"))
+    val raw = embeddings.select(col("vec_id"),
+        col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
         !exists(col("embedding"), _.isNull))
     // one action: fetch + width-check + norm the corpus (doubles as the
     // fixed-width assertion the separate assertFixedWidth scan used to pay)
-    val corpus: Array[(Long, Array[Double], Double)] = raw.collect().map { r =>
-      val v = r.getSeq[Number](1).map(_.doubleValue()).toArray
-      var acc = 0d; var i = 0
-      while (i < v.length) { acc += v(i) * v(i); i += 1 }
-      (r.getLong(0), v, math.sqrt(acc))
-    }
+    val corpus = raw.as[(Long, Array[Double])].collect()
+      .map { case (id, v) => (id, v, normOf(v)) }
     if (corpus.isEmpty)
       return embeddings.select(col("vec_id"), lit(0L).as("neighbor_id"),
         lit(0d).as("cosine"), lit(0).as("rank")).where(lit(false))
@@ -63,56 +116,26 @@ object Similarity {
     require(corpus.forall(_._2.length == dims),
       s"embeddings must be fixed-width: saw sizes " +
         s"${corpus.map(_._2.length).min}..${corpus.map(_._2.length).max}")
-    val cents = corpus.filter(_._3 > 0d)
-    val bc = spark.sparkContext.broadcast(cents)
-    val clean = raw.filter(size(col("embedding")) === lit(dims))
-    def scoreRows[T](ds: org.apache.spark.sql.Dataset[(Long, T)])(
-        elem: (T, Int) => Double): DataFrame =
-      ds.mapPartitions { it =>
+    val bc = spark.sparkContext.broadcast(corpus.filter(_._3 > 0d))
+    raw.filter(size(col("embedding")) === lit(dims))
+      .as[(Long, Array[Double])]
+      .mapPartitions { it =>
         val cs = bc.value
         it.flatMap { case (vid, emb) =>
-          var acc = 0d; var i = 0
-          while (i < dims) { val x = elem(emb, i); acc += x * x; i += 1 }
-          val nrm = math.sqrt(acc)
-          if (nrm == 0d) Iterator.empty
+          val nrm = normOf(emb)
+          if (!(nrm > 0d)) Iterator.empty
           else {
-            // bounded top-k insertion, ordered (cosine desc, neighbor asc)
-            val topCos = new Array[Double](k)
-            val topId = new Array[Long](k)
-            var m = 0
+            val top = new TopK(k)
             var c = 0
             while (c < cs.length) {
               val (nid, cv, cnrm) = cs(c)
-              if (nid != vid) {
-                var d = 0d; var j = 0
-                while (j < dims) { d += elem(emb, j) * cv(j); j += 1 }
-                val rawCos = d / (nrm * cnrm)
-                val cos = if (java.lang.Double.isFinite(rawCos))
-                  java.math.BigDecimal.valueOf(rawCos)
-                    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-                else rawCos
-                var p = m
-                while (p > 0 && (topCos(p - 1) < cos ||
-                    (topCos(p - 1) == cos && topId(p - 1) > nid))) p -= 1
-                if (p < k) {
-                  var q = math.min(m, k - 1)
-                  while (q > p) { topCos(q) = topCos(q - 1); topId(q) = topId(q - 1); q -= 1 }
-                  topCos(p) = cos; topId(p) = nid
-                  if (m < k) m += 1
-                }
-              }
+              if (nid != vid) top.offer(round6(dotOf(emb, cv) / (nrm * cnrm)), nid)
               c += 1
             }
-            Iterator.tabulate(m)(r2 => (vid, topId(r2), topCos(r2), r2 + 1))
+            top.ranked(vid)
           }
         }
       }.toDF("vec_id", "neighbor_id", "cosine", "rank")
-    clean.schema("embedding").dataType match {
-      case ArrayType(DoubleType, _) =>
-        scoreRows(clean.as[(Long, Array[Double])])((a, i) => a(i))
-      case _ =>
-        scoreRows(clean.as[(Long, Array[Float])])((a, i) => a(i).toDouble)
-    }
   }
 
   /** ceil(log2(n)) via leading zeros — exact at powers of two (no FP). */
@@ -268,13 +291,6 @@ object Similarity {
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
   }
 
-  /** Spark SQL's double total order (SQLOrderingUtil.compareDoubles):
-    * -0.0 == 0.0, NaN greater than everything and equal to itself — the
-    * fold comparators must match it exactly or a NaN/signed-zero tie would
-    * rank differently than the row_number() window they replace. */
-  @inline private def cmpD(x: Double, y: Double): Int =
-    if (x == y) 0 else java.lang.Double.compare(x, y)
-
   /** Rank (vec_id, neighbor_id, cosine) rows to their per-vec top-k with a
     * bounded insertion fold instead of a row_number() window (round 6,
     * guide §2.4): the window plan capped rows map-side (a partial
@@ -283,15 +299,13 @@ object Similarity {
     * fold keeps only k per group in O(rows x k) with no sort buffer. The
     * gain is the removed per-partition sorts, not shuffle volume: the fold
     * has no map-side cap and also shuffles its 8-byte grouping key, so it
-    * can move more bytes than the window did. Identical output: same
-    * (cosine desc, neighbor_id asc) order via Spark's own double total
-    * order ([[cmpD]]), same row_number semantics (ranks 1..k, ties broken
-    * by neighbor asc). Precondition: `cosine` is non-null — the typed
-    * decode throws on a null, where the window ordered it NULLS LAST (no
-    * caller can produce one: 0/0 gives NaN, not null). Used by [[annTopK]]
-    * only; [[ivfTopKFrom]] keeps its window, because the fold measured no
-    * win there. Pinned against the window formulation in
-    * RewriteParitySpec. */
+    * can move more bytes than the window did. Identical output: the
+    * [[TopK]] fold keeps the window's (cosine desc, neighbor_id asc) order
+    * under Spark's own double total order and its row_number semantics
+    * (ranks 1..k, ties broken by neighbor asc). Precondition: `cosine` is
+    * non-null — the typed decode throws on a null, where the window
+    * ordered it NULLS LAST (no caller can produce one: 0/0 gives NaN, not
+    * null). Pinned against the window formulation in RewriteParitySpec. */
   private def topKRanked(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
@@ -299,22 +313,9 @@ object Similarity {
       .as[(Long, Long, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (vid, it) =>
-        val topCos = new Array[Double](k)
-        val topId = new Array[Long](k)
-        var m = 0
-        while (it.hasNext) {
-          val (_, nid, cos) = it.next()
-          var p = m
-          while (p > 0 && { val c = cmpD(topCos(p - 1), cos)
-            c < 0 || (c == 0 && topId(p - 1) > nid) }) p -= 1
-          if (p < k) {
-            var q = math.min(m, k - 1)
-            while (q > p) { topCos(q) = topCos(q - 1); topId(q) = topId(q - 1); q -= 1 }
-            topCos(p) = cos; topId(p) = nid
-            if (m < k) m += 1
-          }
-        }
-        Iterator.tabulate(m)(r => (vid, topId(r), topCos(r), r + 1))
+        val top = new TopK(k)
+        it.foreach { case (_, nid, cos) => top.offer(cos, nid) }
+        top.ranked(vid)
       }
       .toDF("vec_id", "neighbor_id", "cosine", "rank")
   }
@@ -458,117 +459,72 @@ object Similarity {
     * `transform` island while the broadcast form is a tight per-partition
     * loop; and at sqrt(n) cells a 10^6-vector corpus wants ~1000
     * centroids x 64 dims, where the inlined literals would also stall
-    * planning. The SQL formulation is kept as [[ivfProbesInline]] — the
-    * oracle-shaped reference implementation the DuckDB CTE mirrors —
-    * and [[OpsSpec]] pins both paths row-identical on the same centroid
-    * set (the correctness bridge from the CTE to the production path). */
+    * planning. The SQL formulation lives on in test scope as
+    * `OpsSpec.ivfProbesInline` — the oracle-shaped reference
+    * implementation the DuckDB CTE mirrors — and OpsSpec pins both paths
+    * row-identical on the same centroid set (the correctness bridge from
+    * the CTE to the production path). */
   private[ops] def ivfProbesWith(embeddings: DataFrame,
       centroids: Seq[(Long, Array[Double])], nprobe: Int): DataFrame = {
-    reg(embeddings)
     if (centroids.isEmpty) // empty corpus: keep schema, emit nothing
       return embeddings.select(col("vec_id"), lit(0L).as("cell"),
         lit(0d).as("cosine"), lit(0).as("probe_rank")).where(lit(false))
     ivfProbesBroadcast(embeddings, centroids, nprobe)
   }
 
-  /** The SQL-expression formulation of the probe projection (literal
-    * centroid structs + codegen'd dot kernel + an interpreted-HOF
-    * transform/sort/slice): the REFERENCE implementation — it is exactly
-    * the math the DuckDB ivf_probes CTE spells, so the OpsSpec parity
-    * test inline == broadcast is what licenses the faster mapPartitions
-    * path to carry the oracled queries. Not used in production (see
-    * [[ivfProbesWith]] for the measurement). */
-  private[ops] def ivfProbesInline(embeddings: DataFrame,
-      centroids: Seq[(Long, Array[Double])], nprobe: Int): DataFrame = {
-    reg(embeddings)
-    val cents = centroids.map { case (id, v) =>
-      val nrm = math.sqrt(v.foldLeft(0d)((acc, x) => acc + x * x))
-      val arr = v.map(d => s"${java.lang.Double.toString(d)}D").mkString(", ")
-      s"named_struct('cell', ${id}L, 'cnrm', ${java.lang.Double.toString(nrm)}D, 'cv', array($arr))"
-    }.mkString("array(", ", ", ")")
-    val probes =
-      s"""slice(array_sort(transform($cents, c -> named_struct(
-         |  'ncos', -round(graft_dot_fd(embedding, c.cv) / (nrm * c.cnrm), 6),
-         |  'cell', c.cell))), 1, $nprobe)""".stripMargin
-    embeddings.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", norm("embedding"))
-      .select(col("vec_id"), posexplode(expr(probes)))
-      .select(col("vec_id"), col("col.cell").as("cell"),
-        (col("col.ncos") * -1d).as("cosine"), (col("pos") + 1).as("probe_rank"))
-  }
-
   /** The production probe assignment (every nlist — see [[ivfProbesWith]]
     * for the measurement): the centroid matrix rides an executor
     * broadcast and each partition scores its rows in a tight loop —
-    * identical math to [[ivfProbesInline]] (index-order double folds,
-    * java BigDecimal HALF_UP rounding like Spark's round(), ties broken by
-    * ascending cell), so the two paths are row-identical ON CLEAN ROWS;
-    * only the physical plan differs. Shuffle-free and one-scan: the
-    * standard Spark shape for a per-row reduction against a large shared
-    * constant. Corrupt rows (NULL id/embedding, a
-    * NULL element, a width different from the centroids', a zero-norm
-    * vector — no cosine to anything) are DROPPED
-    * before the typed scan — the degrade-don't-crash twin of the inlined
-    * path's NULL-dot semantics (graft_dot_fd nulls the cosine there; here
-    * a NULL would NPE the primitive-array encoder and a ragged row would
-    * otherwise get a silently-wrong partial-prefix dot). */
+    * identical math to the inlined SQL reference (elements widened to
+    * double once by an exact cast, index-order double folds, [[round6]],
+    * ties broken by ascending cell), so the two paths are row-identical
+    * ON CLEAN ROWS; only the physical plan differs. Shuffle-free and
+    * one-scan: the standard Spark shape for a per-row reduction against a
+    * large shared constant. Corrupt rows (NULL id/embedding, a NULL
+    * element, a width different from the centroids', a zero-norm vector
+    * — no cosine to anything) are DROPPED before the typed scan — the
+    * degrade-don't-crash twin of the inlined path's NULL-dot semantics
+    * (graft_dot_fd nulls the cosine there; here a NULL would NPE the
+    * primitive-array encoder and a ragged row would otherwise get a
+    * silently-wrong partial-prefix dot).
+    *
+    * The probe order is its own sort, not [[TopK]]: its reference key is
+    * the inlined projection's `array_sort` on `ncos` = -cosine ascending,
+    * under which a NaN cosine sorts LAST, while the neighbor windows'
+    * `cosine DESC` (and so [[TopK]]) put NaN first. `(-cos, cell)`
+    * ascending under Scala's total Double order is exactly that key. */
   private[ops] def ivfProbesBroadcast(embeddings: DataFrame,
       centroids: Seq[(Long, Array[Double])], nprobe: Int): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val dims = centroids.head._2.length
     // a zero-norm centroid cannot score any row by cosine (0/0) — skip
     // the cell entirely rather than divide by zero (under ANSI mode even
     // double division by zero raises)
-    val cents = centroids.map { case (id, v) =>
-      (id, math.sqrt(v.foldLeft(0d)((acc, x) => acc + x * x)), v)
-    }.filter(_._2 > 0d).toArray
+    val cents = centroids.map { case (id, v) => (id, normOf(v), v) }
+      .filter(_._2 > 0d).toArray
     val bc = spark.sparkContext.broadcast(cents)
-    // dispatch on the element type like the dot kernels: an array<double>
-    // corpus (e.g. the int8 quantize-dequantize roundtrip) folds lossless
-    // doubles; everything else reads floats widened per element. Both
-    // branches share scoreRows so the arithmetic is identical.
-    def scoreRows[T](ds: org.apache.spark.sql.Dataset[(Long, T)])(
-        elem: (T, Int) => Double): DataFrame =
-      ds.mapPartitions { it =>
-        val cs = bc.value
-        it.flatMap { case (vid, emb) =>
-          var acc = 0d; var i = 0
-          while (i < dims) { val x = elem(emb, i); acc += x * x; i += 1 }
-          val nrm = math.sqrt(acc)
-          // a zero-norm row has no cosine to any cell: corrupt, dropped
-          // like the NULL/ragged rows (BigDecimal.valueOf(0/0 = NaN)
-          // would otherwise throw and kill the job)
-          if (nrm == 0d) Iterator.empty
-          else {
-            val scored = cs.map { case (cell, cnrm, cv) =>
-              var d = 0d; var j = 0
-              while (j < dims) { d += elem(emb, j) * cv(j); j += 1 }
-              // finite-guard is defense in depth (overflow to Infinity)
-              val raw = d / (nrm * cnrm)
-              val cos = if (java.lang.Double.isFinite(raw))
-                java.math.BigDecimal.valueOf(raw)
-                  .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-              else raw
-              (cos, cell)
-            }
-            scored.sortBy { case (cos, cell) => (-cos, cell) }
-              .take(nprobe).iterator.zipWithIndex
-              .map { case ((cos, cell), idx) => (vid, cell, cos, idx + 1) }
-          }
-        }
-      }.toDF("vec_id", "cell", "cosine", "probe_rank")
-    val clean = embeddings.select(col("vec_id"), col("embedding"))
+    embeddings.select(col("vec_id"),
+        col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
         !exists(col("embedding"), _.isNull) &&
         size(col("embedding")) === lit(dims))
-    clean.schema("embedding").dataType match {
-      case ArrayType(DoubleType, _) =>
-        scoreRows(clean.as[(Long, Array[Double])])((a, i) => a(i))
-      case _ =>
-        scoreRows(clean.as[(Long, Array[Float])])((a, i) => a(i).toDouble)
-    }
+      .as[(Long, Array[Double])]
+      .mapPartitions { it =>
+        val cs = bc.value
+        it.flatMap { case (vid, emb) =>
+          val nrm = normOf(emb)
+          // a zero-norm row has no cosine to any cell: corrupt, dropped
+          // like the NULL/ragged rows
+          if (nrm == 0d) Iterator.empty
+          else cs.map { case (cell, cnrm, cv) =>
+              (round6(dotOf(emb, cv) / (nrm * cnrm)), cell)
+            }
+            .sortBy { case (cos, cell) => (-cos, cell) }
+            .take(nprobe).iterator.zipWithIndex
+            .map { case ((cos, cell), idx) => (vid, cell, cos, idx + 1) }
+        }
+      }.toDF("vec_id", "cell", "cosine", "probe_rank")
   }
 
   /** IVF probes over KMeans-TRAINED coarse centroids (MLlib, fixed seed)
@@ -623,18 +579,19 @@ object Similarity {
     * exist only to be thrown away (k of ~cell-size kept per probed cell).
     * Now queries and members are cogrouped BY CELL (queries ship once per
     * probe with their embedding; members once with theirs), each cell
-    * folds its per-query top-k in a bounded insertion loop — the same
-    * kernel as [[knnBrute]] — and only n x nprobe x k partial rows reach
+    * folds its per-query top-k in a [[TopK]] and only n x nprobe x k
+    * partial rows reach
     * the final per-query merge window. The dot-product count is unchanged
     * (that is the intrinsic IVF verify cost); what disappears is the
     * candidate-pair row materialization and its window sort.
     *
     * Value identity with the join+window form: embeddings widen to double
     * exactly (cast; = graft_dot_f/graft_norm_f element widening), cosine
-    * rounds via BigDecimal HALF_UP (= round(_, 6)), per-cell partial
-    * top-k keeps every global top-k candidate because each neighbor lives
-    * in exactly one cell, and the final window applies the identical
-    * (cosine desc, neighbor asc) order. Corrupt rows cannot reach this
+    * rounds via [[round6]], per-cell partial top-k keeps every global
+    * top-k candidate because each neighbor lives in exactly one cell and
+    * [[TopK]] ranks NaN/signed-zero cosines as the window does, and the
+    * final window applies the identical (cosine desc, neighbor asc)
+    * order. Corrupt rows cannot reach this
     * code: only probe-surviving ids (ivfProbesBroadcast drops NULL /
     * ragged / zero-norm rows) appear on either side. Pinned by
     * RewriteParitySpec against the join+window formulation. */
@@ -642,7 +599,6 @@ object Similarity {
       queries: Option[DataFrame] = None): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
     // the probe projection feeds BOTH branches of the cell cogroup (query
     // probes and rank-1 assignments); materialize it once — n x nprobe
     // skinny rows — instead of running the centroid-scoring scan twice
@@ -668,51 +624,20 @@ object Similarity {
       .join(eD.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
       .select(col("cell"), col("neighbor_id"), col("emb"))
       .as[(Long, Long, Array[Double])]
-    def nrm(v: Array[Double]): Double = {
-      var acc = 0d; var i = 0
-      while (i < v.length) { acc += v(i) * v(i); i += 1 }
-      math.sqrt(acc)
-    }
     val partial = qRows.groupByKey(_._1).cogroup(mRows.groupByKey(_._1)) {
       (_, qs, ms) =>
         val mem = ms.toArray
-        if (mem.isEmpty) Iterator.empty
-        else {
-          val mN = mem.map(m => nrm(m._3))
-          qs.flatMap { case (_, vid, qe) =>
-            val qn = nrm(qe)
-            val dims = qe.length
-            val topCos = new Array[Double](k)
-            val topId = new Array[Long](k)
-            var m = 0
-            var c = 0
-            while (c < mem.length) {
-              val nid = mem(c)._2
-              if (nid != vid) {
-                val mv = mem(c)._3
-                var d = 0d; var j = 0
-                while (j < dims) { d += qe(j) * mv(j); j += 1 }
-                val rawCos = d / (qn * mN(c))
-                val cos = if (java.lang.Double.isFinite(rawCos))
-                  java.math.BigDecimal.valueOf(rawCos)
-                    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-                else rawCos
-                var pp = m
-                while (pp > 0 && (topCos(pp - 1) < cos ||
-                    (topCos(pp - 1) == cos && topId(pp - 1) > nid))) pp -= 1
-                if (pp < k) {
-                  var q2 = math.min(m, k - 1)
-                  while (q2 > pp) {
-                    topCos(q2) = topCos(q2 - 1); topId(q2) = topId(q2 - 1); q2 -= 1
-                  }
-                  topCos(pp) = cos; topId(pp) = nid
-                  if (m < k) m += 1
-                }
-              }
-              c += 1
-            }
-            Iterator.tabulate(m)(r2 => (vid, topId(r2), topCos(r2)))
+        val mN = mem.map(m => normOf(m._3))
+        qs.flatMap { case (_, vid, qe) =>
+          val qn = normOf(qe)
+          val top = new TopK(k)
+          var c = 0
+          while (c < mem.length) {
+            val nid = mem(c)._2
+            if (nid != vid) top.offer(round6(dotOf(qe, mem(c)._3) / (qn * mN(c))), nid)
+            c += 1
           }
+          top.ranked(vid).map { case (v, n, cos, _) => (v, n, cos) }
         }
     }.toDF("vec_id", "neighbor_id", "cosine")
     // final merge over the n x nprobe x k partials — identical rank

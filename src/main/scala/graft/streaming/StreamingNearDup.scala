@@ -342,8 +342,11 @@ object StreamingNearDup {
   /** round(dot / (|a| * |b|), 6) with the EXACT arithmetic of the batch
     * verify column `round(graft_dot_f(ea, eb) / (graft_norm_f(ea) *
     * graft_norm_f(eb)), 6)`: index-order double folds, norms rooted before
-    * multiplying, java BigDecimal HALF_UP rounding (== Spark's round() on
-    * doubles — the same pinning as [[graft.ops.Similarity.ivfProbesBroadcast]]). */
+    * multiplying, rounded by [[graft.ops.Similarity.round6]] (Spark's
+    * round() on doubles, shared with every batch fold). A zero-norm vector
+    * yields NaN, which round6 passes through, so it DEGRADES (fails any
+    * >= minCosine check) exactly like the batch round() instead of
+    * poison-pilling the streaming query. */
   private[streaming] def cosine6(a: Array[Float], b: Array[Float]): Double = {
     var d = 0d; var na = 0d; var nb = 0d; var i = 0
     while (i < a.length) {
@@ -352,14 +355,7 @@ object StreamingNearDup {
       nb += b(i).toDouble * b(i).toDouble
       i += 1
     }
-    // a zero-norm vector yields NaN, which must DEGRADE (fails any
-    // >= minCosine check) exactly like the batch round() — BigDecimal
-    // .valueOf(NaN) would throw and poison-pill the streaming query
-    val raw = d / (math.sqrt(na) * math.sqrt(nb))
-    if (java.lang.Double.isFinite(raw))
-      java.math.BigDecimal.valueOf(raw)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    else raw
+    graft.ops.Similarity.round6(d / (math.sqrt(na) * math.sqrt(nb)))
   }
 
   /** Streaming embedding near-dups WITH the cosine verify closed in-stream:

@@ -25,6 +25,17 @@ class PipelineResumeSpec extends SparkSpec {
       .collect().sortBy(_._1).toSeq
     assert(t1.map(_.name) === Seq("transcripts", "mentions", "tokens",
       "candidates", "assignments", "eval"))
+    // each manifest counts its stage from the footers of the part files
+    // the write committed: one counter per part-* file, summing to rows
+    t1.foreach { t =>
+      val manifest = Files.readString(Paths.get(wd, t.name, "_manifest.json"))
+      val counters = """\{"file": "([^"]+)", "rows": (\d+)\}""".r
+        .findAllMatchIn(manifest).map(m => m.group(1) -> m.group(2).toLong).toSeq
+      val parts = new java.io.File(s"$wd/${t.name}/data").list()
+        .filter(_.startsWith("part-")).toSet
+      assert(parts.nonEmpty && counters.map(_._1).toSet === parts, t.name)
+      assert(counters.map(_._2).sum === t.rows, t.name)
+    }
 
     // second run: every stage must be skipped (manifest fingerprints match)
     val (t2, a2) = Pipeline.run(spark, cfg)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class OpsSpec extends SparkSpec {
@@ -195,6 +196,32 @@ class OpsSpec extends SparkSpec {
     assert(brute == ivf, "nprobe = nlist must equal brute force")
   }
 
+  /** The SQL-expression formulation of the probe projection (literal
+    * centroid structs + codegen'd dot kernel + an interpreted-HOF
+    * transform/sort/slice): the REFERENCE implementation — it is exactly
+    * the math the DuckDB ivf_probes CTE spells, so the parity test below
+    * (inline == broadcast) is what licenses the faster mapPartitions path
+    * to carry the oracled queries. Not used in production (see
+    * `Similarity.ivfProbesWith` for the measurement). */
+  private def ivfProbesInline(embeddings: DataFrame,
+      centroids: Seq[(Long, Array[Double])], nprobe: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    val cents = centroids.map { case (id, v) =>
+      val nrm = math.sqrt(v.foldLeft(0d)((acc, x) => acc + x * x))
+      val arr = v.map(d => s"${java.lang.Double.toString(d)}D").mkString(", ")
+      s"named_struct('cell', ${id}L, 'cnrm', ${java.lang.Double.toString(nrm)}D, 'cv', array($arr))"
+    }.mkString("array(", ", ", ")")
+    val probes =
+      s"""slice(array_sort(transform($cents, c -> named_struct(
+         |  'ncos', -round(graft_dot_fd(embedding, c.cv) / (nrm * c.cnrm), 6),
+         |  'cell', c.cell))), 1, $nprobe)""".stripMargin
+    embeddings.select(col("vec_id"), col("embedding"))
+      .withColumn("nrm", expr("graft_norm_f(embedding)"))
+      .select(col("vec_id"), posexplode(expr(probes)))
+      .select(col("vec_id"), col("col.cell").as("cell"),
+        (col("col.ncos") * -1d).as("cosine"), (col("pos") + 1).as("probe_rank"))
+  }
+
   test("IVF broadcast probe path is row-identical to the inlined projection") {
     // the production path is the broadcast-matrix mapPartitions pass; the
     // literal-inlined SQL projection is the oracle-shaped REFERENCE
@@ -206,7 +233,7 @@ class OpsSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
       .toIndexedSeq
-    val inline = Similarity.ivfProbesInline(emb, cents, 3)
+    val inline = ivfProbesInline(emb, cents, 3)
       .collect().map(_.toSeq).toSet
     val bcast = Similarity.ivfProbesBroadcast(emb, cents, 3)
       .collect().map(_.toSeq).toSet
@@ -232,7 +259,7 @@ class OpsSpec extends SparkSpec {
     // kernel dispatches dotDD on the same types
     val dd = emb.select($"vec_id",
       $"embedding".cast("array<double>").as("embedding"))
-    val inlineD = Similarity.ivfProbesInline(dd, cents, 3)
+    val inlineD = ivfProbesInline(dd, cents, 3)
       .collect().map(_.toSeq).toSet
     val bcastD = Similarity.ivfProbesBroadcast(dd, cents, 3)
       .collect().map(_.toSeq).toSet

@@ -173,6 +173,56 @@ class RewriteParitySpec extends SparkSpec {
     assert(neuT === refT)
   }
 
+  /** Ten seeded 3-float vectors; vec 5 holds a NaN element, so every
+    * cosine it takes part in is NaN, which Spark's window ranks FIRST under
+    * `cosine DESC`. */
+  private def nanCorpus: DataFrame = {
+    val rnd = new scala.util.Random(1)
+    (1L to 10L).map { i =>
+      val v = Array.fill(3)(rnd.nextFloat())
+      if (i == 5L) v(1) = Float.NaN
+      (i, v)
+    }.toDF("vec_id", "embedding")
+  }
+
+  /** Rows with the cosine as its bit pattern: tuple equality treats
+    * NaN != NaN, so a plain set of NaN-cosine rows can never match. */
+  private def bits(df: DataFrame): Set[(Long, Long, Long, Int)] =
+    df.as[(Long, Long, Double, Int)].collect().map { case (v, n, c, r) =>
+      (v, n, java.lang.Double.doubleToLongBits(c), r) }.toSet
+
+  test("ivfTopK ranks NaN cosines as the cell-join + window does") {
+    val emb = nanCorpus
+    val neu = bits(Similarity.ivfTopK(emb, k = 2, nlist = 2, nprobe = 2))
+    val ref = bits(ivfTopKJoinWindow(emb,
+      Similarity.ivfProbes(emb, nlist = 2, nprobe = 2), 2))
+    assert(neu.exists(r => java.lang.Double.isNaN(
+      java.lang.Double.longBitsToDouble(r._3))))
+    assert(neu === ref)
+  }
+
+  test("annTopK ranks NaN cosines as the mirrored window does") {
+    val emb = nanCorpus
+    val cand = Similarity.annCandidates(emb, tables = 4, planes = 2)
+      .localCheckpoint()
+    val neu = bits(Similarity.annTopK(emb, k = 2, candDf = Some(cand)))
+    val ref = bits(annTopKWindow(emb, 2, cand))
+    assert(neu.exists(r => java.lang.Double.isNaN(
+      java.lang.Double.longBitsToDouble(r._3))))
+    assert(neu === ref)
+  }
+
+  test("knnBrute drops a NaN-norm row as query and as neighbor") {
+    val emb = nanCorpus
+    val neu = bits(Similarity.knnBrute(emb, k = 2))
+    assert(!neu.exists(r => r._1 == 5L || r._2 == 5L))
+    // every other vector still gets k neighbors, ranked as the crossJoin
+    // window ranks them over the corpus without the NaN row
+    assert(neu.groupBy(_._1).map { case (v, rs) => v -> rs.map(_._4) } ===
+      (1L to 10L).filter(_ != 5L).map(_ -> Set(1, 2)).toMap)
+    assert(neu === bits(knnBruteCrossJoin(emb.filter(col("vec_id") =!= 5L), 2)))
+  }
+
   /** The round-5 lshPairs formulation: bucket self-join + distinct. */
   private def lshPairsDistinct(d: DataFrame, maxBucket: Option[Int]): Set[(Long, Long)] = {
     val all = TextDedup.bandBuckets(d)
