@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.checkpoint.CheckpointStore
 
 /** Stage 5a — DataFrame-based connected components over the candidate
   * graph (the reference's alternative clusterer
@@ -30,6 +31,9 @@ object ConnectedComponents {
     * loop aims at when it redistributes a round's links. Bounds a task's
     * union-find at 2 x this many nodes: about 14 MB of primitive arrays. */
   val UnionFindEdges: Int = 1 << 18
+
+  /** Rounds between durable snapshots of the loop state (round 0 first). */
+  private val DurableEvery = 5
 
   /** edges: (src, dst) undirected pair per surviving candidate (any
     * direction; duplicates, reversed copies and self-loops allowed; a null
@@ -61,25 +65,16 @@ object ConnectedComponents {
     * edges whose ids are scattered over the partitions); it raises rather
     * than return wrong labels.
     *
-    * Lineage is cut every round: executor-local blocks by default; with
-    * `durableDir` the round's state is written to
-    * `$durableDir/cc_labels_r$round` every `durableEvery` rounds (round 0
-    * included) and read back — the durable path for long-lived clusters
-    * with dynamic allocation, where executor-local blocks can be lost (the
-    * Pipeline runner passes its stage work dir here). */
+    * Lineage is cut every round by `CheckpointStore.materialize`: into
+    * executor-local blocks by default; with `durableDir`, every
+    * [[DurableEvery]] rounds (round 0 included) the state is written to
+    * `$durableDir/cc_labels_r$round` and read back — the durable path for
+    * long-lived clusters with dynamic allocation, where executor-local
+    * blocks can be lost (the Pipeline runner passes its stage work dir). */
   def run(edges: DataFrame, maxIter: Int = 50,
-      durableDir: Option[String] = None, durableEvery: Int = 5): DataFrame = {
+      durableDir: Option[String] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    def cut(df: DataFrame, round: Int): DataFrame = durableDir match {
-      case Some(dir) if round % durableEvery == 0 =>
-        val path = s"$dir/cc_labels_r$round"
-        // rows of one label side by side: its dictionary indices then
-        // run-length encode, which keeps the snapshot small
-        df.sortWithinPartitions(col("label")).write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
-      case _ => df.localCheckpoint()
-    }
 
     var pairs: Dataset[(Long, Long)] = edges
       .select(least(col("src"), col("dst")).cast("long").as("a"),
@@ -106,10 +101,14 @@ object ConnectedComponents {
           lit(null).cast("array<bigint>").as("rest"))
         .unionByName(step.filter(col("rest").isNotNull)
           .select(lit(null).cast("bigint").as("id"), col("label"), col("rest")))
-      val obs = Observation()
-      state = cut(next.observe(obs, coalesce(
-        sum(when(col("rest").isNotNull, size(col("rest")))), lit(0L)).as("links")), round)
-      links = obs.get("links").asInstanceOf[Long]
+      val durable = durableDir.filter(_ => round % DurableEvery == 0)
+        .map(_ + s"/cc_labels_r$round")
+      // one label's rows side by side run-length encode: a smaller snapshot
+      val (cut, seen) = CheckpointStore.materialize(
+        if (durable.isEmpty) next else next.sortWithinPartitions(col("label")), durable,
+        coalesce(sum(when(col("rest").isNotNull, size(col("rest")))), lit(0L)).as("links"))
+      state = cut
+      links = seen("links").asInstanceOf[Long]
       if (links > 0L) pairs = state.filter(col("rest").isNotNull)
         .select(col("label"), explode(col("rest")))
         .as[(Long, Long)]

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.functions._
+import graft.checkpoint.CheckpointStore.materialize
 import graft.engine._
 
 /** Stage 5b — greedy consistency clustering refining the candidate graph
@@ -40,8 +41,8 @@ import graft.engine._
   * Control flow reads observations, not extra jobs: whether any component
   * exceeds `maxComponentSize`, and whether an attachment round proposed
   * anything, are row counts observed on the checkpoint that materializes
-  * the frame in question (the `Observation` pattern of
-  * [[ConnectedComponents.run]]).
+  * the frame in question ([[graft.checkpoint.CheckpointStore.materialize]],
+  * as in [[ConnectedComponents.run]]).
   */
 object GreedyClustering {
 
@@ -129,11 +130,11 @@ object GreedyClustering {
       candidates: DataFrame,
       hierarchy: String = "soundex",
       maxComponentSize: Int = 3000,
-      /** When set, per-round attachment-loop state (assignments +
-        * profiles) is persisted to parquet instead of executor-local
-        * checkpoint blocks — the durable path for long-lived clusters
-        * with dynamic allocation (same contract as
-        * ConnectedComponents.run's durableDir). */
+      /** When set, each attachment round's state (assignments + profiles)
+        * and the connected-component loops (`cc`, `cc_strong`, `cc_loner`)
+        * are snapshotted under it as parquet, not in executor-local blocks —
+        * the durable path for long-lived clusters with dynamic allocation.
+        * Every cut goes through CheckpointStore.materialize (no inference job). */
       durableDir: Option[String] = None,
       /** Instrumentation valve (Bench): receives (phase, seconds) for the
         * stage's internal phases — cc / prep / small / core / loner /
@@ -163,22 +164,6 @@ object GreedyClustering {
         sink(name, (System.nanoTime() - t0) / 1e9)
         r
       case None => f
-    }
-
-    def pin(df: DataFrame, name: String): DataFrame = durableDir match {
-      case Some(dir) =>
-        val path = s"$dir/$name"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
-      case None => df.localCheckpoint()
-    }
-
-    // checkpoints `df` and returns its row count, observed on the
-    // checkpoint's own job instead of a count job of its own
-    def counted(df: DataFrame): (DataFrame, Long) = {
-      val obs = Observation()
-      val out = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint()
-      (out, obs.get("rows").asInstanceOf[Long])
     }
 
     // pin the candidates for the two passes below (CC and edges) — but
@@ -219,9 +204,10 @@ object GreedyClustering {
     // the count rides the checkpoint's job; resolved HERE so the common
     // no-giant case also skips the two anti-join stages below (with zero
     // oversized components they are identity filters)
-    val (bigComps, nBig) = phase("prep")(counted(cc.groupBy($"component_id").count()
-      .filter($"count" > maxComponentSize).select($"component_id")))
-    val noBig = nBig == 0L
+    val (bigComps, nBig) = phase("prep")(materialize(cc.groupBy($"component_id").count()
+        .filter($"count" > maxComponentSize).select($"component_id"),
+      None, count(lit(1)).as("rows")))
+    val noBig = nBig("rows") == 0L
 
     // ---- exact reference path for normally-sized components
     val small = exactCluster(
@@ -317,8 +303,8 @@ object GreedyClustering {
     var round = 0
     var done = false
     while (round < AttachRounds && !done) phase("attach") {
-      assignDf = pin(assignDf, s"greedy_assign_r$round")
-      profilesDf = pin(profilesDf, s"greedy_profiles_r$round")
+      assignDf = materialize(assignDf, durableDir.map(_ + s"/greedy_assign_r$round"))._1
+      profilesDf = materialize(profilesDf, durableDir.map(_ + s"/greedy_profiles_r$round"))._1
       val sizes = assignDf.groupBy($"cluster_id").count().localCheckpoint()
       val singles = assignDf.join(sizes.filter($"count" === 1), "cluster_id")
         .select($"mention_id")
@@ -358,8 +344,8 @@ object GreedyClustering {
             res.isConsistent || res.canBecomeConsistent
           }.iterator.map(c => AssignRow(id, c.cluster_id))
         }
-      val (attachDf, proposed) = counted(attach.toDF())
-      if (proposed == 0L) done = true
+      val (attachDf, proposed) = materialize(attach.toDF(), None, count(lit(1)).as("rows"))
+      if (proposed("rows") == 0L) done = true
       else {
         // Fold the PROPOSED refs into their clusters' profiles and emit the
         // final assignments FROM the fold: an attachment only commits if its

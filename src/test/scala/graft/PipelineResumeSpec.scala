@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions._
 
 /** Resumability contract (north rule): every stage checkpointed with
   * lineage + counters; a restart skips completed stages and reproduces
@@ -60,6 +63,75 @@ class PipelineResumeSpec extends SparkSpec {
     deleteRec(wd)
   }
 
+  /** Runs `body` and returns its result with the call site of every job
+    * that ran outside a SQL execution meanwhile (a job inside one carries
+    * its execution id). A schema-inference read is such a job. The bus
+    * delivers events in order, so once a fence job's start is seen, every
+    * earlier job's has been. */
+  private def jobsOutsideSql[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val fence = "graft.test.fence"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    @volatile var fenced = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == fence)) fenced = true
+        else if (props.forall(_.getProperty(SQLExecution.EXECUTION_ID_KEY) == null))
+          sites.add(e.stageInfos.flatMap(_.details.linesIterator)
+            .filter(_.startsWith("graft.")).take(3).mkString(" < "))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobGroup(fence, fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!fenced && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(fenced, "listener bus did not drain within 60 s")
+      (out, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("checkpoints are written and resumed without schema-inference jobs") {
+    val wd = Files.createTempDirectory("graft_no_inference").toString
+    val cfg = Pipeline.Config("/root/testdata/sf0.001", wd)
+    // a fresh run's only such jobs are Synth's two reads of its input
+    // (customer.parquet, for transcripts and for the gold mentions)
+    val ((t1, a1), fresh) = jobsOutsideSql(Pipeline.run(spark, cfg))
+    // a fully resumed run reads every stage with its footer schema
+    val ((t2, a2), resumed) = jobsOutsideSql(Pipeline.run(spark, cfg))
+    assert((fresh.length, resumed.length) === (2, 0), (fresh ++ resumed).mkString("\n"))
+    assert(fresh.forall(_.startsWith("graft.synth.Synth")), fresh.mkString("\n"))
+    assert(t2.map(t => t.name -> t.rows) === t1.map(t => t.name -> t.rows))
+    // written and resumed frames carry the schema inference would give
+    val inferred = spark.read.parquet(s"$wd/assignments/data").schema
+    assert(a1.schema === inferred && a2.schema === inferred)
+    val store = new graft.checkpoint.CheckpointStore(wd, spark)
+    t1.foreach(t => assert(store.read(t.name).schema ===
+      spark.read.parquet(s"$wd/${t.name}/data").schema, t.name))
+    deleteRec(wd)
+  }
+
+  test("a stage's frame has the inferred schema when written and when resumed") {
+    val wd = Files.createTempDirectory("graft_schema").toString
+    val store = new graft.checkpoint.CheckpointStore(wd, spark)
+    // non-nullable columns, a nested struct, an array, a map and column
+    // metadata: inference makes every field nullable and keeps the metadata
+    def frame() = spark.range(5).select($"id",
+      struct($"id".as("a"), ($"id" * 2).cast("int").as("b")).as("s"),
+      array($"id").as("xs"), map($"id", lit("v")).as("m"),
+      lit(1.5).as("d", new org.apache.spark.sql.types.MetadataBuilder()
+        .putString("note", "kept").build()))
+    val written = store.stage("s", "X")(frame())
+    val inferred = spark.read.parquet(s"$wd/s/data").schema
+    val resumed = store.stage("s", "X")(throw new IllegalStateException("not resumed"))
+    assert(written.schema === inferred && resumed.schema === inferred)
+    assert(resumed.orderBy($"id").collect().toSeq === frame().orderBy($"id").collect().toSeq)
+    deleteRec(wd)
+  }
+
   test("a stage that lost a data file is recomputed on resume, not trusted") {
     val wd = Files.createTempDirectory("graft_lost_part").toString
     def lose(stage: String) = assert(new java.io.File(s"$wd/$stage/data").listFiles()
@@ -75,6 +147,22 @@ class PipelineResumeSpec extends SparkSpec {
     store.stage("s", "X")(spark.range(100).repartition(4).toDF())
     lose("s")
     assert(store.stage("s", "X")(spark.range(100).toDF()).count() === 100)
+    // the rows are all there, but in a file whose footer holds no Spark
+    // schema (a plain parquet writer's): unreadable, so recomputed
+    store.stage("t", "X")(spark.range(100).coalesce(1).toDF())
+    val part = new java.io.File(s"$wd/t/data").listFiles().filter(_.getName.startsWith("part-")).head
+    assert(part.delete())
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(part.toURI)).withType(schema).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    try (0L until 100L).foreach(i => writer.write(groups.newGroup().append("id", i)))
+    finally writer.close()
+    assert(spark.read.parquet(s"$wd/t/data").count() === 100)
+    var recomputed = false
+    store.stage("t", "X") { recomputed = true; spark.range(100).toDF() }
+    assert(recomputed)
     deleteRec(wd)
   }
 

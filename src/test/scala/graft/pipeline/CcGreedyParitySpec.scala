@@ -77,7 +77,7 @@ class CcGreedyParitySpec extends SparkSpec {
         s"graph $g over $parts partitions")
       if (parts == 64)
         assert(labels(ConnectedComponents.run(spread(edges, parts),
-          durableDir = Some(s"$dir/g$g"), durableEvery = 1)) === want,
+          durableDir = Some(s"$dir/g$g"))) === want,
           s"graph $g over $parts partitions, durable")
     }
   }

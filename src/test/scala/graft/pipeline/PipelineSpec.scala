@@ -207,7 +207,7 @@ class PipelineSpec extends SparkSpec {
   test("connected components: durable checkpoint round-trip") {
     val dir = java.nio.file.Files.createTempDirectory("cc_durable").toString
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
-    val comp = ConnectedComponents.run(edges, durableDir = Some(dir), durableEvery = 1)
+    val comp = ConnectedComponents.run(edges, durableDir = Some(dir))
       .as[(Long, Long)].collect().toMap
     assert(comp.values.forall(_ == 1L))
     // loop state was persisted to parquet (resume surface for lost executors)
