@@ -68,9 +68,9 @@ object Queries {
   // them); memoized like any other stage so the regex+aggregate over the
   // transcripts runs once per process instead of once per eval query.
   private def goldMentions(ss: SparkSession, d: String) =
-    cachedStage(ss, d, "gold")(Synth.goldMentions(ss, d))
+    cachedStage(ss, d, "gold")(Synth.goldMentions(transcripts(ss, d)))
   private def goldPairs(ss: SparkSession, d: String) =
-    cachedStage(ss, d, "goldPairs")(Synth.goldPairs(ss, d))
+    cachedStage(ss, d, "goldPairs")(Synth.goldPairs(goldMentions(ss, d), mentions(ss, d)))
 
   private def documents(s: SparkSession, dir: String) =
     s.read.parquet(s"$dir/documents.parquet")

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.checkpoint.CheckpointStore
 
 /** Stage 1 — canonicalization: windowed turn aggregation of transcripts into
   * entity-mention documents, then the mention (REFERENCE-vertex) table.
@@ -10,10 +12,11 @@ import org.apache.spark.sql.functions._
   * (dao/G.java:129-156, dao/vertex/RefV.java:13); `weight` = corpus
   * occurrence count of the exact surface (dao/vertex/V.java:63).
   *
-  * Scale notes: every transform groups by `conv_id` or `name` — a single
-  * hash-partitioned shuffle each, no window over an unpartitioned frame:
-  * the `mention_id` is a parallel hash of the surface, so no stage in this
-  * file has a single-task bottleneck at any scale.
+  * Scale notes: every transform groups by `conv_id` or `name`, or windows
+  * by `mention_id` — a single hash-partitioned shuffle each, no window over
+  * an unpartitioned frame: the `mention_id` is a parallel hash of the
+  * surface, so no stage in this file has a single-task bottleneck at any
+  * scale.
   */
 object Canonicalize {
 
@@ -75,7 +78,6 @@ object Canonicalize {
   def mentionEventsAuto(transcripts: DataFrame,
       stoplist: Seq[String] = defaultStoplist,
       minTokens: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val stopArr = array(stoplist.map(lit): _*)
     val w = Window.partitionBy(col("conv_id"), col("turn_idx")).orderBy(col("pos"))
     transcripts
@@ -102,6 +104,9 @@ object Canonicalize {
       .select(col("conv_id"), col("turn_idx"), col("name"))
   }
 
+  /** Salt rounds [[mentions]] tries before it gives up on a collision. */
+  private val MaxRepairRounds = 8
+
   /** The mention (reference) table: distinct surface + corpus weight + a
     * deterministic id.
     *
@@ -113,56 +118,43 @@ object Canonicalize {
     * collisions at n=10^9), so instead of failing, colliding names are
     * AUTO-REPAIRED: per colliding id, the lexicographically-first name
     * keeps it and the rest are re-hashed with an incremented salt, repeated
-    * until unique (deterministic — independent of row order — and a no-op
-    * costing one aggregate + join when there are no collisions, the
-    * overwhelmingly common case). `idHexChars` is exposed so tests can
-    * force collisions at tiny widths; the oracle stays valid at the
-    * default width because repair never fires there at sandbox scale. */
-  def mentions(transcripts: DataFrame, idHexChars: Int = 15,
-      maxRepairRounds: Int = 8): DataFrame = {
-    def hashed(salt: org.apache.spark.sql.Column) =
+    * until unique (deterministic — independent of row order). Each round
+    * is one window over `mention_id` (group size and min name per id),
+    * materialized once with the largest group size observed on that same
+    * action, so the happy path computes the chain once and runs no
+    * separate check job. `idHexChars` is exposed so tests can force
+    * collisions at tiny widths; the oracle stays valid at the default
+    * width because repair never fires there at sandbox scale. */
+  def mentions(transcripts: DataFrame, idHexChars: Int = 15): DataFrame = {
+    def hashed(salt: Column) =
       conv(substring(md5(when(salt === 0, col("name"))
         .otherwise(concat(col("name"), lit("#"), salt))), 1, idHexChars), 16, 10)
         .cast("long")
-    // Eagerly materialize each round's table BEFORE the collision check:
-    // the previous shape ran the check (an isEmpty over an agg+join chain)
-    // on the LAZY frame and then let the caller recompute the whole
-    // synth+regex+aggregate chain again for its own action — two full
-    // computations per call on the happy path. Now the chain computes
-    // once, and the happy-path check is a single aggregate over the
-    // checkpointed rows with no join (round-6 change, guide §1.2: don't
-    // compute things twice). The repair rounds (astronomically rare at the
-    // default width) keep the min-name keep rule unchanged.
-    var cur = mentionEvents(transcripts)
+    val byId = Window.partitionBy(col("mention_id"))
+    var salted = mentionEvents(transcripts)
       .groupBy(col("name"))
       .agg(count(lit(1)).as("weight"))
       .withColumn("salt", lit(0))
-      .withColumn("mention_id", hashed(col("salt")))
-      .localCheckpoint()
     var round = 0
-    while (round <= maxRepairRounds) {
-      // single-job check: the max id-group size (isEmpty on the expected-
-      // empty clash set escalates through several limit-scan jobs)
-      val maxGroup = cur.groupBy(col("mention_id"))
-        .agg(count(lit(1)).as("__n"))
-        .agg(coalesce(max(col("__n")), lit(0L))).collect()(0).getLong(0)
-      if (maxGroup <= 1L)
+    while (round <= MaxRepairRounds) {
+      val (cur, seen) = CheckpointStore.materialize(
+        salted.withColumn("mention_id", hashed(col("salt")))
+          .withColumn("__n", count(lit(1)).over(byId))
+          .withColumn("__keep", min(col("name")).over(byId)),
+        None, coalesce(max(col("__n")), lit(0L)).as("maxGroup"))
+      if (seen("maxGroup").asInstanceOf[Long] <= 1L)
         return cur.select(col("name"), col("weight"), col("mention_id"))
-      val sizes = cur.groupBy(col("mention_id"))
-        .agg(min(col("name")).as("__keep"), count(lit(1)).as("__n"))
-      cur = cur.join(sizes, "mention_id")
-        .withColumn("salt",
-          when(col("__n") > 1 && col("name") =!= col("__keep"), col("salt") + 1)
-            .otherwise(col("salt")))
-        .select(col("name"), col("weight"), col("salt"))
-        .withColumn("mention_id", hashed(col("salt")))
-        .localCheckpoint()
+      salted = cur.select(col("name"), col("weight"),
+        when(col("__n") > 1 && col("name") =!= col("__keep"), col("salt") + 1)
+          .otherwise(col("salt")).as("salt"))
       round += 1
     }
-    sys.error(s"mention_id collisions unresolved after $maxRepairRounds salt rounds")
+    sys.error(s"mention_id collisions unresolved after $MaxRepairRounds salt rounds")
   }
 
-  /** Raises if the hash id collides (distinct names must map 1:1 to ids). */
+  /** Raises if the hash id collides (distinct names must map 1:1 to ids).
+    * [[mentions]] already makes this check while it materializes its
+    * rows, so `Pipeline.run` does not call it again. */
   def assertUniqueIds(mentions: DataFrame): Unit = {
     val dupes = mentions.groupBy(col("mention_id"))
       .count().filter(col("count") > 1).count()

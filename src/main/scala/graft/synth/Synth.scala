@@ -94,35 +94,33 @@ object Synth {
 
   /** Gold labels (generator-side truth, analogue of RESOLVED_ID vertices /
     * RID_REF edge weights — dao/vertex/V.java:20, dao/edge/E.java:11).
-    * One row per (surface name, entity): cnt = planted occurrences. */
-  def goldMentions(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    transcriptMentionEvents(spark, sfDir)
-      .groupBy($"surface".as("name"), $"entity_id")
+    * One row per (surface name, entity): cnt = planted occurrences.
+    * Derived from a [[transcripts]] frame the caller already holds (a
+    * pipeline passes its transcripts checkpoint) with its own regex over
+    * turns 0, 1 and 3, not Canonicalize's extractor, so the labels stay
+    * independent of the code they score. */
+  def goldMentions(transcripts: DataFrame): DataFrame = {
+    import transcripts.sparkSession.implicits._
+    transcripts.filter($"turn_idx".isin(0, 1, 3))
+      .select(regexp_extract($"text", "\\[\\[([a-z. ]+)\\]\\]", 1).as("name"),
+        concat(lit("e"), expr("cast(substring(conv_id, 2, 8) as bigint) div 4")).as("entity_id"))
+      .groupBy($"name", $"entity_id")
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Internal: one row per planted mention occurrence (3 per conversation). */
-  private def transcriptMentionEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val t = transcripts(spark, sfDir)
-    t.filter($"turn_idx".isin(0, 1, 3))
-      .withColumn("surface", regexp_extract($"text", "\\[\\[([a-z. ]+)\\]\\]", 1))
-      .withColumn("k", expr("cast(substring(conv_id, 2, 8) as bigint) div 4"))
-      .withColumn("entity_id", concat(lit("e"), $"k"))
-      .select($"conv_id", $"turn_idx", $"surface", $"entity_id")
-  }
+  /** [[goldMentions]] of the corpus synthesized from `sfDir`. */
+  def goldMentions(spark: SparkSession, sfDir: String): DataFrame =
+    goldMentions(transcripts(spark, sfDir))
 
   /** Labeled pairs for paired evaluation (E-2 input; the reference's
-    * gold-pairs TSV, evaluation/paired/FMeasure.java:107-111).
-    * Positives: name pairs sharing an entity. Negatives: name pairs
-    * sharing their final token but no entity (hard negatives inside the
-    * natural block). Returns (id1, id2, label) over mention ids. */
-  def goldPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val gold = goldMentions(spark, sfDir)
-    val mentions = graft.pipeline.Canonicalize.mentions(transcripts(spark, sfDir))
-      .select($"name", $"mention_id")
+    * gold-pairs TSV, evaluation/paired/FMeasure.java:107-111), from the
+    * [[goldMentions]] and the mentions table (name, mention_id) of the
+    * same corpus. Positives: name pairs sharing an entity. Negatives: name
+    * pairs sharing their final token but no entity (hard negatives inside
+    * the natural block). Returns (id1, id2, label) over mention ids. */
+  def goldPairs(gold: DataFrame, mentions: DataFrame): DataFrame = {
+    import gold.sparkSession.implicits._
+    val ids = mentions.select($"name", $"mention_id")
     val pos = gold.as("a").join(gold.as("b"), "entity_id")
       .filter($"a.name" < $"b.name")
       .select($"a.name".as("name1"), $"b.name".as("name2")).distinct()
@@ -134,8 +132,8 @@ object Synth {
     val neg = sameLw.join(pos, Seq("name1", "name2"), "left_anti")
     pos.withColumn("label", lit(1))
       .unionByName(neg.withColumn("label", lit(0)))
-      .join(mentions.withColumnRenamed("name", "name1").withColumnRenamed("mention_id", "id1"), "name1")
-      .join(mentions.withColumnRenamed("name", "name2").withColumnRenamed("mention_id", "id2"), "name2")
+      .join(ids.withColumnRenamed("name", "name1").withColumnRenamed("mention_id", "id1"), "name1")
+      .join(ids.withColumnRenamed("name", "name2").withColumnRenamed("mention_id", "id2"), "name2")
       .select($"id1", $"id2", $"label")
   }
 

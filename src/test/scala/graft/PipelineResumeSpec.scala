@@ -63,23 +63,23 @@ class PipelineResumeSpec extends SparkSpec {
     deleteRec(wd)
   }
 
-  /** Runs `body` and returns its result with the call site of every job
-    * that ran outside a SQL execution meanwhile (a job inside one carries
-    * its execution id). A schema-inference read is such a job. The bus
-    * delivers events in order, so once a fence job's start is seen, every
-    * earlier job's has been. */
-  private def jobsOutsideSql[T](body: => T): (T, Seq[String]) = {
+  /** Runs `body` and returns its result with every job that ran
+    * meanwhile: its call site, and whether it ran outside a SQL execution
+    * (a job inside one carries its execution id). A schema-inference read
+    * is such a job. The bus delivers events in order, so once a fence
+    * job's start is seen, every earlier job's has been. */
+  private def jobsDuring[T](body: => T): (T, Seq[(String, Boolean)]) = {
     val sc = spark.sparkContext
     val fence = "graft.test.fence"
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
     @volatile var fenced = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
         if (props.exists(_.getProperty("spark.jobGroup.id") == fence)) fenced = true
-        else if (props.forall(_.getProperty(SQLExecution.EXECUTION_ID_KEY) == null))
-          sites.add(e.stageInfos.flatMap(_.details.linesIterator)
-            .filter(_.startsWith("graft.")).take(3).mkString(" < "))
+        else jobs.add((e.stageInfos.flatMap(_.details.linesIterator)
+            .filter(_.startsWith("graft.")).take(3).mkString(" < "),
+          props.forall(_.getProperty(SQLExecution.EXECUTION_ID_KEY) == null)))
       }
     }
     sc.addSparkListener(listener)
@@ -90,20 +90,27 @@ class PipelineResumeSpec extends SparkSpec {
       val deadline = System.nanoTime() + 60L * 1000000000L
       while (!fenced && System.nanoTime() < deadline) Thread.sleep(5)
       assert(fenced, "listener bus did not drain within 60 s")
-      (out, sites.toArray(Array.empty[String]).toSeq)
+      (out, jobs.toArray(Array.empty[(String, Boolean)]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
   test("checkpoints are written and resumed without schema-inference jobs") {
     val wd = Files.createTempDirectory("graft_no_inference").toString
     val cfg = Pipeline.Config("/root/testdata/sf0.001", wd)
-    // a fresh run's only such jobs are Synth's two reads of its input
-    // (customer.parquet, for transcripts and for the gold mentions)
-    val ((t1, a1), fresh) = jobsOutsideSql(Pipeline.run(spark, cfg))
-    // a fully resumed run reads every stage with its footer schema
-    val ((t2, a2), resumed) = jobsOutsideSql(Pipeline.run(spark, cfg))
-    assert((fresh.length, resumed.length) === (2, 0), (fresh ++ resumed).mkString("\n"))
-    assert(fresh.forall(_.startsWith("graft.synth.Synth")), fresh.mkString("\n"))
+    def outsideSql(jobs: Seq[(String, Boolean)]) = jobs.filter(_._2).map(_._1)
+    // a fresh run's only job outside SQL is Synth.transcripts' inference
+    // read of its input (customer.parquet); gold derives from the checkpoint
+    val ((t1, a1), fresh) = jobsDuring(Pipeline.run(spark, cfg))
+    // a fully resumed run reads every stage with its footer schema and
+    // starts no job at all
+    val ((t2, a2), resumed) = jobsDuring(Pipeline.run(spark, cfg))
+    assert((outsideSql(fresh).length, resumed.length) === (1, 0),
+      (outsideSql(fresh) ++ resumed.map(_._1)).mkString("\n"))
+    assert(outsideSql(fresh).forall(_.startsWith("graft.synth.Synth$.transcripts")),
+      outsideSql(fresh).mkString("\n"))
+    // re-clustering with cc over those checkpoints reads no input again
+    val (_, recluster) = jobsDuring(Pipeline.run(spark, cfg.copy(clusterer = "cc")))
+    assert(outsideSql(recluster).isEmpty, outsideSql(recluster).mkString("\n"))
     assert(t2.map(t => t.name -> t.rows) === t1.map(t => t.name -> t.rows))
     // written and resumed frames carry the schema inference would give
     val inferred = spark.read.parquet(s"$wd/assignments/data").schema

@@ -126,14 +126,17 @@ class PipelineSpec extends SparkSpec {
     val cands = Blocking.candidates(Tokenize.tokens(
       Canonicalize.mentions(t, idHexChars = 4)))
     assert(cands.count() > 0)
+    def plainId(name: String, hexChars: Int) = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(name.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.take(hexChars), 16)
+    // the keep rule: the min name of every plain-hash group keeps its id
+    val groups = narrow.groupBy(p => plainId(p._1, 4))
+    assert(groups.exists(_._2.length > 1) && groups.forall { case (id, g) =>
+      g.minBy(_._1)._2 == id }, groups.values.filter(_.length > 1).map(_.mkString(" ")).mkString("\n"))
     // at the default width no salt fires: ids equal the plain md5 prefix
     val full = Canonicalize.mentions(t)
       .select($"name", $"mention_id").as[(String, Long)].collect().toMap
-    full.foreach { case (name, id) =>
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(name.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      assert(id === java.lang.Long.parseLong(hex.take(15), 16))
-    }
+    full.foreach { case (name, id) => assert(id === plainId(name, 15)) }
   }
 
   test("connected components: 300-hop chain converges within the round cap") {
