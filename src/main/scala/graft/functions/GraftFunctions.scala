@@ -27,8 +27,6 @@ object GraftFunctions {
     StringSim.mongeElkan(a.toString, b.toString)
   def soundex(a: UTF8String): UTF8String =
     UTF8String.fromString(Phonetics.soundex(a.toString))
-  def metaphone(a: UTF8String): UTF8String =
-    UTF8String.fromString(Phonetics.metaphone(a.toString))
 
   /** Dot product of two float arrays, accumulated in index order as
     * doubles — bit-identical to `aggregate(zip_with(a, b, (x, y) ->
@@ -369,8 +367,6 @@ object GraftFunctions {
       (es: Seq[Expression]) => MongeElkanExpr(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("graft_soundex",
       (es: Seq[Expression]) => SoundexExpr(es(0)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_metaphone",
-      (es: Seq[Expression]) => MetaphoneExpr(es(0)), "scala_udf")
     reg.createOrReplaceTempFunction("graft_dot_f",
       (es: Seq[Expression]) => DotFExpr(es(0), es(1)), "scala_udf")
     // graft_dot_fd is kept as an alias (oracle SQL and the sigColumn /
@@ -734,16 +730,5 @@ case class SoundexExpr(child: Expression)
     GraftFunctions.soundex(a.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, a => s"graft.functions.GraftFunctions.soundex($a)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-case class MetaphoneExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullSafeEval(a: Any): Any =
-    GraftFunctions.metaphone(a.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.GraftFunctions.metaphone($a)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -31,13 +31,13 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Uniform hash u ∈ [0,1): first 8 hex chars of md5("<key>:<salt>") read
-    * as a 32-bit int over 2^32. Exact in IEEE double (numerator < 2^32,
+  /** Uniform hash u ∈ [0,1): [[TextDedup.h32]] of "<key>:<salt>" (the first
+    * 8 hex chars of its md5 as a 32-bit int) over 2^32. Exact in IEEE double (numerator < 2^32,
     * denominator a power of two), so Spark and DuckDB agree bit-for-bit:
     * DuckDB spells it ('0x' || substr(md5(k),1,8))::BIGINT / 4294967296.0. */
   def hashU(key: Column, salt: String): Column =
-    conv(substring(md5(concat_ws(":", key.cast("string"), lit(salt))), 1, 8),
-      16, 10).cast("double") / lit(4294967296.0)
+    TextDedup.h32(concat_ws(":", key.cast("string"), lit(salt))).cast("double") /
+      lit(4294967296.0)
 
   /** THE keep-decision scan shared by [[stratifiedSample]] and
     * [[corpusMix]]: hash-u draw per doc, broadcast join against the tiny

@@ -328,8 +328,12 @@ object Similarity {
       candDf: Option[DataFrame] = None): DataFrame = {
     reg(embeddings)
     val ordered = candDf.getOrElse(annCandidates(embeddings, tables, planes, maxBucket))
+    // a zero- or NaN-norm row has no cosine: dropped before the pair join,
+    // as knnBrute and the IVF probes drop it (Spark orders NaN above every
+    // double, so `nrm > 0` alone would keep it)
     val e = embeddings.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", norm("embedding"))
+      .filter(col("nrm") > 0 && !isnan(col("nrm")))
     // score each UNORDERED candidate pair once, then mirror the scored row
     // (round 6, guide §2.3): cosine is exactly symmetric — the dot
     // kernel's per-element multiply commutes and the index-order sum is
@@ -514,9 +518,9 @@ object Similarity {
         val cs = bc.value
         it.flatMap { case (vid, emb) =>
           val nrm = normOf(emb)
-          // a zero-norm row has no cosine to any cell: corrupt, dropped
-          // like the NULL/ragged rows
-          if (nrm == 0d) Iterator.empty
+          // a zero- or NaN-norm row has no cosine to any cell: corrupt,
+          // dropped like the NULL/ragged rows (knnBrute's `norm > 0` rule)
+          if (!(nrm > 0d)) Iterator.empty
           else cs.map { case (cell, cnrm, cv) =>
               (round6(dotOf(emb, cv) / (nrm * cnrm)), cell)
             }

@@ -58,11 +58,7 @@ object TextAnalysis {
     .withColumn("top_word_ratio", round(expr(
       """array_max(transform(array_distinct(words),
         |  d -> size(filter(words, x -> x = d)))) / cast(size(words) as double)""".stripMargin), 6))
-    .withColumn("g3", expr(
-      """CASE WHEN size(words) >= 3
-        |     THEN transform(sequence(1, size(words) - 2),
-        |                    i -> concat_ws(' ', words[i-1], words[i], words[i+1]))
-        |     ELSE array() END""".stripMargin))
+    .withColumn("g3", TextDedup.trigrams("words"))
     .withColumn("dup_3gram_ratio", round(expr(
       """CASE WHEN size(g3) > 0
         |     THEN (size(g3) - size(array_distinct(g3))) / cast(size(g3) as double)
@@ -96,10 +92,8 @@ object TextAnalysis {
     * (doc_id, fingerprint). */
   def fingerprints(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"),
-      expr(
-        """aggregate(split(text, ' '), 0L,
-          |  (acc, w) -> (acc * 131 + cast(conv(substring(md5(w), 1, 8), 16, 10) as long))
-          |              % 2147483648L)""".stripMargin).as("fingerprint"))
+      aggregate(split(col("text"), " "), lit(0L),
+        (acc, w) => (acc * 131 + TextDedup.h32(w)) % 2147483648L).as("fingerprint"))
 
   /** Gopher-style repetition signals: fraction of the doc taken by its
     * most frequent word, and fraction of word-3-grams that are duplicates

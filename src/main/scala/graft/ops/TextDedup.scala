@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Large-scale training-data deduplication operators over the `documents`
@@ -14,12 +14,47 @@ import org.apache.spark.sql.functions._
   * explode -> per-key min (partial agg) -> band-bucket self-join (the only
   * quadratic step, bounded per bucket); verification joins run only on
   * LSH-surviving pairs.
+  *
+  * The signature family is defined here once and shared by the batch,
+  * incremental and streaming paths ([[graft.streaming.StreamingNearDup]],
+  * [[graft.streaming.StreamingCuration]]), which must agree bit for bit:
+  * [[h32]] is the one hash (also behind SimHash, the rolling fingerprint
+  * and the sampling draw), [[trigrams]] the one shingle builder,
+  * [[minhashKey]] the one MinHash key and [[bandKeys]] the one band-key
+  * builder. The first-writer founder rule is the streaming
+  * `StreamingNearDup.founderFold`.
   */
 object TextDedup {
 
   /** 32-bit integer from md5 prefix — cross-engine deterministic. */
-  private def h32(c: org.apache.spark.sql.Column) =
+  private[graft] def h32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
+
+  /** Word 3-grams of the word array in column `words`, in position order
+    * with repeats. Under 3 words the array is empty (guarded: Spark's
+    * sequence(1, 0) is the DESCENDING [1, 0], unlike SQL generate_series
+    * which is empty). */
+  private[graft] def trigrams(words: String): Column = expr(
+    s"""CASE WHEN size($words) >= 3
+       |     THEN transform(sequence(1, size($words) - 2),
+       |                    i -> concat_ws(' ', $words[i-1], $words[i], $words[i+1]))
+       |     ELSE array() END""".stripMargin)
+
+  /** MinHash key j of one shingle; minhash_j of a document is the minimum
+    * key over its distinct shingles. */
+  private[graft] def minhashKey(shingle: Column, j: Int): Column =
+    h32(concat(shingle, lit(s":$j")))
+
+  /** LSH band bucket keys of one document: its minhashes in j order, as
+    * columns, cut into bands of `rowsPerBand` and joined ",", band b at
+    * index b. A partial last band would be a key no other path forms, so
+    * the hash count must divide evenly. */
+  private[graft] def bandKeys(minhashes: Seq[Column], rowsPerBand: Int): Seq[Column] = {
+    require(rowsPerBand > 0 && minhashes.size % rowsPerBand == 0,
+      s"nHashes (${minhashes.size}) must be a multiple of rowsPerBand ($rowsPerBand)")
+    minhashes.grouped(rowsPerBand)
+      .map(ms => concat_ws(",", ms.map(_.cast("string")): _*)).toSeq
+  }
 
   /** Exact duplicate groups: (doc_id, text_hash, keep_id, is_dup).
     *
@@ -37,17 +72,11 @@ object TextDedup {
   }
 
   /** Distinct word 3-gram shingles per doc: (doc_id, shingle). Docs under
-    * 3 words yield none (guarded: Spark's sequence(1, 0) is the
-    * DESCENDING [1, 0], unlike SQL generate_series which is empty). */
+    * 3 words yield none. */
   def shingles(documents: DataFrame): DataFrame =
     documents
       .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(w) >= 3
-          |     THEN transform(sequence(1, size(w) - 2),
-          |                    i -> concat_ws(' ', w[i-1], w[i], w[i+1]))
-          |     ELSE array() END""".stripMargin))
-        .as("shingle"))
+      .select(col("doc_id"), explode(trigrams("w")).as("shingle"))
       .distinct()
 
   /** MinHash signatures, 8 permutations: (doc_id, j, minhash). Single
@@ -56,8 +85,7 @@ object TextDedup {
     * rows), exploded back to long form after the aggregate. */
   def minhashSignatures(documents: DataFrame, nHashes: Int = 8,
       shinglesDf: Option[DataFrame] = None): DataFrame = {
-    val mins = (0 until nHashes).map(j =>
-      min(h32(concat(col("shingle"), lit(s":$j")))).as(s"m$j"))
+    val mins = (0 until nHashes).map(j => min(minhashKey(col("shingle"), j)).as(s"m$j"))
     shinglesDf.getOrElse(shingles(documents))
       .groupBy(col("doc_id"))
       .agg(mins.head, mins.tail: _*)
@@ -87,30 +115,20 @@ object TextDedup {
     // formulation's, which the DuckDB oracle still computes, so every
     // Verify run re-proves the equivalence (round-6 change, guide §2.3:
     // nothing downstream of the bucket join shuffles).
-    val nBands = nHashes / rowsPerBand
-    // uncapped (oracle-exact) path: fold the per-band bucket keys straight
-    // out of ONE per-doc aggregation over the long-form signatures — the
-    // bandBuckets groupBy(doc, band) + this groupBy(doc) was two shuffles
-    // for what one ordered collect_list derives in-row (round 6, §2.4).
-    // The capped path keeps the two-step shape: a capped-away band is not
-    // derivable in-row, so its slot is nulled via the map rebuild.
+    // uncapped (oracle-exact) path: the per-doc band key array straight
+    // out of ONE per-doc regroup of the long-form signatures (round 6,
+    // §2.4). The capped path regroups the capped bucket rows instead: a
+    // capped-away band is not derivable in-row, so its slot is nulled via
+    // the map rebuild.
     val arr = maxBucket match {
-      case None =>
-        sigsDf.getOrElse(minhashSignatures(documents, nHashes))
-          .groupBy(col("doc_id"))
-          .agg(array_sort(collect_list(struct(col("j"), col("minhash")))).as("sm"))
-          .select(col("doc_id"), expr(
-            s"""transform(sequence(0, ${nBands - 1}), b ->
-               |  array_join(transform(slice(sm, b * $rowsPerBand + 1, $rowsPerBand),
-               |                       x -> cast(x.minhash as string)), ','))"""
-              .stripMargin).as("ba"))
+      case None => bandKeyArrays(documents, nHashes, rowsPerBand, sigsDf)
       case Some(_) =>
         Valves.capGroups(bandBuckets(documents, nHashes, rowsPerBand, sigsDf),
             Seq("band", "bucket_key"), maxBucket)
           .groupBy(col("doc_id"))
           .agg(map_from_entries(collect_list(struct(col("band"), col("bucket_key")))).as("m"))
-          .select(col("doc_id"),
-            expr(s"transform(sequence(0, ${nBands - 1}), i -> m[i])").as("ba"))
+          .select(col("doc_id"), expr(
+            s"transform(sequence(0, ${nHashes / rowsPerBand - 1}), i -> m[i])").as("ba"))
     }
     val exploded = arr
       .select(col("doc_id"), col("ba"), posexplode(col("ba")).as(Seq("band", "bucket_key")))
@@ -124,6 +142,17 @@ object TextDedup {
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
   }
 
+  /** One row per doc: (doc_id, ba) with `ba[b]` the [[bandKeys]] key of
+    * band b, from the long-form signatures regrouped per doc in j order. */
+  private def bandKeyArrays(documents: DataFrame, nHashes: Int, rowsPerBand: Int,
+      sigsDf: Option[DataFrame]): DataFrame = {
+    val keys = bandKeys((0 until nHashes).map(j => col("sm")(j)("minhash")), rowsPerBand)
+    sigsDf.getOrElse(minhashSignatures(documents, nHashes))
+      .groupBy(col("doc_id"))
+      .agg(array_sort(collect_list(struct(col("j"), col("minhash")))).as("sm"))
+      .select(col("doc_id"), array(keys: _*).as("ba"))
+  }
+
   /** Per-doc LSH band bucket keys: (doc_id, band, bucket_key) — the
     * banded MinHash signature rows [[lshPairs]] self-joins and
     * [[signatureIndex]] persists. Per-document values (each doc's minimum
@@ -132,11 +161,8 @@ object TextDedup {
     * incremental-dedup split consistent with the batch oracle. */
   def bandBuckets(documents: DataFrame, nHashes: Int = 8, rowsPerBand: Int = 2,
       sigsDf: Option[DataFrame] = None): DataFrame =
-    sigsDf.getOrElse(minhashSignatures(documents, nHashes))
-      .withColumn("band", (col("j") / rowsPerBand).cast("int"))
-      .groupBy(col("doc_id"), col("band"))
-      .agg(array_join(expr("transform(array_sort(collect_list(struct(j, minhash))), x -> x.minhash)"), ",")
-        .as("bucket_key"))
+    bandKeyArrays(documents, nHashes, rowsPerBand, sigsDf)
+      .select(col("doc_id"), posexplode(col("ba")).as(Seq("band", "bucket_key")))
 
   /** The persisted dedup signature index of a corpus: (doc_id, kind, key)
     * with one `kind='exact'` row (key = md5 text hash) and one
@@ -261,17 +287,14 @@ object TextDedup {
     * accumulator, then the fingerprint fold. Used by the streaming path
     * where each document arrives as a single row; the batch operator
     * keeps the wide-agg shape (map-side partial aggregation). */
-  def simhashColumn(textCol: String = "text"): org.apache.spark.sql.Column = {
-    val hs = s"transform(filter(split($textCol, ' '), w -> w <> ''), " +
-      "w -> cast(conv(substring(md5(w), 1, 8), 16, 10) AS bigint))"
-    val counters =
-      s"""aggregate($hs, array_repeat(0, 32),
-         |  (acc, h) -> zip_with(acc, sequence(0, 31),
-         |    (a, b) -> a + IF(((h >> b) & 1) = 1, 1, -1)))""".stripMargin
-    expr(
-      s"""aggregate(zip_with($counters, sequence(0, 31),
-         |  (s, b) -> IF(s > 0, shiftleft(1L, cast(b AS int)), 0L)),
-         |  0L, (acc, v) -> acc + v)""".stripMargin)
+  def simhashColumn(textCol: String = "text"): Column = {
+    val hs = transform(filter(split(col(textCol), " "), _ =!= ""), h32(_))
+    // bit b of the fingerprint, as the long 2^b
+    val bits = typedLit(Seq.tabulate(32)(1L << _))
+    val counters = aggregate(hs, array_repeat(lit(0), 32), (acc, h) =>
+      zip_with(acc, bits, (a, bit) => a + when(h.bitwiseAND(bit) =!= 0, 1).otherwise(-1)))
+    aggregate(zip_with(counters, bits, (s, bit) => when(s > 0, bit).otherwise(0L)),
+      lit(0L), _ + _)
   }
 
   /** SimHash near-duplicate pairs: (a, b, hamming) with a < b and

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Stage 6 — evaluation.
@@ -30,14 +30,20 @@ object Evaluation {
         sum(col("n") * (col("n") - 1) / 2).as("tp"),
         sum(col("n") * (col("n_entity") - col("n"))).as("fn"),
         sum(col("n") * (col("n_cluster") - col("n"))).as("fp"))
-      .select(
-        col("tp").cast("double").as("tp"),
-        col("fp").cast("double").as("fp"),
-        col("fn").cast("double").as("fn"),
-        round(col("tp") / (col("tp") + col("fp")), 6).as("precision"),
-        round(col("tp") / (col("tp") + col("fn")), 6).as("recall"),
-        round(lit(2) * (col("tp") / (col("tp") + col("fp"))) * (col("tp") / (col("tp") + col("fn")))
-          / (col("tp") / (col("tp") + col("fp")) + col("tp") / (col("tp") + col("fn"))), 6).as("f1"))
+      .select(scores: _*)
+  }
+
+  /** The eval row over a one-row frame of `tp`, `fp`, `fn` sums:
+    * (tp, fp, fn, precision, recall, f1), shared with
+    * [[PairedEval.pairedF1]]. The ratios divide the sums as they come
+    * (before the double casts), as both oracles do. */
+  private[pipeline] val scores: Seq[Column] = {
+    val (tp, fp, fn) = (col("tp"), col("fp"), col("fn"))
+    val p = tp / (tp + fp)
+    val r = tp / (tp + fn)
+    Seq(tp.cast("double").as("tp"), fp.cast("double").as("fp"),
+      fn.cast("double").as("fn"), round(p, 6).as("precision"),
+      round(r, 6).as("recall"), round(lit(2) * p * r / (p + r), 6).as("f1"))
   }
 
   // ---------------------------------------------------------------- oracle

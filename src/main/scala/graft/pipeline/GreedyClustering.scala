@@ -130,11 +130,12 @@ object GreedyClustering {
       candidates: DataFrame,
       hierarchy: String = "soundex",
       maxComponentSize: Int = 3000,
-      /** When set, each attachment round's state (assignments + profiles)
-        * and the connected-component loops (`cc`, `cc_strong`, `cc_loner`)
-        * are snapshotted under it as parquet, not in executor-local blocks —
-        * the durable path for long-lived clusters with dynamic allocation.
-        * Every cut goes through CheckpointStore.materialize (no inference job). */
+      /** When set, each attachment round's state (assignments, with the
+        * profiles on seed rows) and the connected-component loops (`cc`,
+        * `cc_strong`, `cc_loner`) are snapshotted under it as parquet, not
+        * in executor-local blocks — the durable path for long-lived
+        * clusters with dynamic allocation. Every cut goes through
+        * CheckpointStore.materialize (no inference job). */
       durableDir: Option[String] = None,
       /** Instrumentation valve (Bench): receives (phase, seconds) for the
         * stage's internal phases — cc / prep / small / core / loner /
@@ -258,10 +259,11 @@ object GreedyClustering {
         bigMentions.toDF().join(groups, Seq("mention_id"), "left"), strong, groups))
     }
 
-    // running state: assignment (mention -> cluster) and per-cluster final
-    // profiles (seed rows carry them)
-    var assignDf = coreOut.select($"mention_id", $"cluster_id")
-    var profilesDf = coreOut.filter($"mention_id" === $"cluster_id")
+    // running state, shaped as exactCluster's output: one (mention_id,
+    // cluster_id, profile) row per mention, the cluster's final profile on
+    // its seed row (mention_id = cluster_id) and empty elsewhere
+    var state = coreOut
+    def profiles = state.filter($"mention_id" === $"cluster_id")
       .select($"cluster_id", $"profile")
 
     // ---- phase 2: loner-loner chaining. Refs left in singleton clusters
@@ -271,8 +273,8 @@ object GreedyClustering {
     // them all singletons — the measured recall gap). Oversized loner
     // components fall through to the attachment rounds below.
     phase("loner") {
-      val sizes = assignDf.groupBy($"cluster_id").count()
-      val singles = assignDf.join(sizes.filter($"count" === 1), "cluster_id")
+      val sizes = state.groupBy($"cluster_id").count()
+      val singles = state.join(sizes.filter($"count" === 1), "cluster_id")
         .select($"mention_id").localCheckpoint()
       val lonerEdges = bigEdges
         .join(singles.withColumnRenamed("mention_id", "src"), "src")
@@ -284,14 +286,8 @@ object GreedyClustering {
         .localCheckpoint()
       val lonerOut = exactSub(bigMentions.toDF().join(bounded, "mention_id"),
         lonerEdges, bounded)
-      val lonerIds = lonerOut.select($"mention_id")
-      assignDf = assignDf.join(lonerIds, Seq("mention_id"), "left_anti")
-        .unionByName(lonerOut.select($"mention_id", $"cluster_id"))
-      profilesDf = profilesDf
-        .join(lonerIds.withColumnRenamed("mention_id", "cluster_id"),
-          Seq("cluster_id"), "left_anti")
-        .unionByName(lonerOut.filter($"mention_id" === $"cluster_id")
-          .select($"cluster_id", $"profile"))
+      state = state.join(lonerOut.select($"mention_id"), Seq("mention_id"), "left_anti")
+        .unionByName(lonerOut)
     }
 
     // ---- phase 3: attachment rounds. Remaining singleton refs are tested
@@ -303,10 +299,9 @@ object GreedyClustering {
     var round = 0
     var done = false
     while (round < AttachRounds && !done) phase("attach") {
-      assignDf = materialize(assignDf, durableDir.map(_ + s"/greedy_assign_r$round"))._1
-      profilesDf = materialize(profilesDf, durableDir.map(_ + s"/greedy_profiles_r$round"))._1
-      val sizes = assignDf.groupBy($"cluster_id").count().localCheckpoint()
-      val singles = assignDf.join(sizes.filter($"count" === 1), "cluster_id")
+      state = materialize(state, durableDir.map(_ + s"/greedy_state_r$round"))._1
+      val sizes = state.groupBy($"cluster_id").count().localCheckpoint()
+      val singles = state.join(sizes.filter($"count" === 1), "cluster_id")
         .select($"mention_id")
       val multiClusters = sizes.filter($"count" > 1).select($"cluster_id")
       val adj = bigEdges
@@ -315,7 +310,7 @@ object GreedyClustering {
           struct($"dst".as("a"), $"src".as("b")))).as("e"))
         .select($"e.a".as("loner_id"), $"e.b".as("nbr"))
         .join(singles.withColumnRenamed("mention_id", "loner_id"), "loner_id")
-        .join(assignDf.select($"mention_id".as("nbr"), $"cluster_id"), "nbr")
+        .join(state.select($"mention_id".as("nbr"), $"cluster_id"), "nbr")
         .join(multiClusters, "cluster_id")
         .filter($"cluster_id" =!= $"loner_id")
       // the neighbour's Prio, as a struct whose fields decode as the tuple
@@ -326,7 +321,7 @@ object GreedyClustering {
       val lonerCands = adj.join(nbrPrio, "nbr")
         .groupBy($"loner_id", $"cluster_id")
         .agg(min(struct($"_1", $"_2", $"_3", $"_4")).as("prio"))
-        .join(profilesDf, "cluster_id")
+        .join(profiles, "cluster_id")
         .select($"loner_id", $"cluster_id", $"prio", $"profile")
         .as[LonerCand]
 
@@ -357,7 +352,7 @@ object GreedyClustering {
           .join(bigMentions.toDF().select($"mention_id", $"weight", $"toks"), "mention_id")
           .select($"cluster_id", $"mention_id", $"weight", $"toks")
           .as[AttachToks]
-        val folded = profilesDf.as[ProfRow].groupByKey(_.cluster_id)
+        val folded = profiles.as[ProfRow].groupByKey(_.cluster_id)
           .cogroup(attachToks.groupByKey(_.cluster_id)) { (k, ps, as) =>
             val pSeq = ps.toSeq
             if (pSeq.isEmpty) Iterator.empty
@@ -382,17 +377,20 @@ object GreedyClustering {
         // never empty when proposals exist: each cluster's first proposal is
         // re-tested against the very profile it was proposed against
         // (matchRef does not mutate; one profile row per cluster)
-        val acceptedDf = folded
-          .select(explode($"accepted").as("mention_id"), $"cluster_id")
-        assignDf = assignDf
+        val acceptedDf = folded.select(explode($"accepted").as("mention_id"),
+          $"cluster_id", array().cast(state.schema("profile").dataType).as("profile"))
+        // the non-seed rows plus the folded seed rows, minus the accepted
+        // loners (whose stale singleton seed rows go with them), plus the
+        // accepted rows
+        state = state.filter($"mention_id" =!= $"cluster_id")
+          .unionByName(folded.select($"cluster_id".as("mention_id"), $"cluster_id", $"profile"))
           .join(acceptedDf.select($"mention_id"), Seq("mention_id"), "left_anti")
           .unionByName(acceptedDf)
-        profilesDf = folded.select($"cluster_id", $"profile")
       }
       round += 1
     }
 
-    assignDf
+    state.select($"mention_id", $"cluster_id")
     }
 
     cc.join(smallAssigns.unionByName(bigAssigns), "mention_id")

@@ -26,14 +26,7 @@ object PairedEval {
         sum(when(col("same") === col("matched"), col("inc")).otherwise(0L)).as("tp"),
         sum(when(col("same") && !col("matched"), col("inc")).otherwise(0L)).as("fp"),
         sum(when(!col("same") && col("matched"), col("inc")).otherwise(0L)).as("fn"))
-      .select(
-        col("tp").cast("double").as("tp"),
-        col("fp").cast("double").as("fp"),
-        col("fn").cast("double").as("fn"),
-        round(col("tp") / (col("tp") + col("fp")), 6).as("precision"),
-        round(col("tp") / (col("tp") + col("fn")), 6).as("recall"),
-        round(lit(2) * (col("tp") / (col("tp") + col("fp"))) * (col("tp") / (col("tp") + col("fn")))
-          / (col("tp") / (col("tp") + col("fp")) + col("tp") / (col("tp") + col("fn"))), 6).as("f1"))
+      .select(Evaluation.scores: _*)
   }
 
   // ---------------------------------------------------------------- oracle

@@ -26,9 +26,11 @@ import StreamingNearDup.FounderState
   *     per doc, no shuffle, no state.
   *   - exact / near duplication are the only cross-document signals. Both
   *     reduce to founder tracking over bucket keys (md5(text) for exact;
-  *     the MinHash band keys of [[StreamingNearDup.bandBuckets]] for
-  *     near), folded through ONE flatMapGroupsWithState keyed by
-  *     (band, key) with event-time-evicted founder state, then merged
+  *     for near, the MinHash band keys of [[StreamingNearDup.withBandKeys]]
+  *     over the shingles of [[graft.ops.TextDedup.trigrams]], the same
+  *     keys as [[StreamingNearDup.bandBuckets]]), folded by the one
+  *     [[StreamingNearDup.founderFold]] in ONE flatMapGroupsWithState
+  *     keyed by (band, key) with event-time-evicted founder state, then merged
   *     back to one row per document by a watermark-closed window
   *     aggregation (Spark supports aggregation after
   *     flatMapGroupsWithState in Append mode).
@@ -37,9 +39,10 @@ import StreamingNearDup.FounderState
   * seen in a bucket is kept, later bucket-mates are flagged — the
   * arrival-order counterpart of the batch min-id cluster representative.
   *
-  * Scale shape: state is one (founder, maxTs) pair per live bucket inside
-  * the watermark horizon, sharded by bucket key across executors; the
-  * merge aggregation holds at most one open window of per-doc partials.
+  * Scale shape: state is one `FounderState` (founder, maxTs, id) per live
+  * bucket inside the watermark horizon, sharded by bucket key across
+  * executors; the merge aggregation holds at most one open window of
+  * per-doc partials.
   * Nothing is global, so the query runs at any executor count.
   */
 object StreamingCuration {
@@ -95,8 +98,6 @@ object StreamingCuration {
     * [[keepSetBatch]] — the two cannot diverge on bucketing or signals. */
   private def bucketedPieces(docs: DataFrame, benchmark: DataFrame,
       minOverlap: Int): DataFrame = {
-    val sigCols = StreamingNearDup.minhashSigCols(8)
-    val bandArr = array(StreamingNearDup.bandStructCols(8, 2): _*)
     // unscorable signals coalesce to the SAME defaults the batch verdict
     // uses (an all-punctuation/empty doc has NULL quality etc.; a typed
     // non-nullable Double field would otherwise poison-pill the stream)
@@ -114,11 +115,9 @@ object StreamingCuration {
     // producer row (same guard as StreamingNearDup's bucket stages).
     // Shared with keepSetBatch, so stream and batch twin stay identical.
     val clean = docs.where(col("doc_id").isNotNull && col("ts").isNotNull)
-    withSignals(clean, benchmark, minOverlap)
-      .select(Seq(col("doc_id"), col("ts"), col("text"), col("sh"))
-        ++ coalesced: _*)
-      .select(Seq(col("doc_id"), col("ts"), col("text"), col("sh"))
-        ++ signalCols ++ sigCols: _*)
+    StreamingNearDup.withBandKeys(withSignals(clean, benchmark, minOverlap)
+        .select(Seq(col("doc_id"), col("ts"), col("text"), col("sh"))
+          ++ coalesced: _*), 8, 2)
       .withColumn("bb", explode(concat(
         // a NULL text hashes to a NULL key, which the batch twin's
         // equi-join on (band, key) would silently drop — breaking its
@@ -129,7 +128,9 @@ object StreamingCuration {
         array(struct(lit(-1).as("band"),
           coalesce(md5(col("text")),
             concat(lit("null:"), col("doc_id"))).as("bucket_key"))),
-        filter(bandArr, _ => size(col("sh")) > 0))))
+        filter(transform(col("band_keys"),
+          (k, b) => struct(b.as("band"), k.as("bucket_key"))),
+          _ => size(col("sh")) > 0))))
       .select(Seq(col("doc_id"), col("ts"), col("bb.band").as("band"),
         col("bb.bucket_key").as("key")) ++ signalCols: _*)
   }
@@ -207,12 +208,12 @@ object StreamingCuration {
       .withWatermark("ts", lateness)
       .as[BucketSig]
       .groupByKey(r => (r.band, r.key))
-      .flatMapGroupsWithState[FounderState, VerdictPiece](
+      .flatMapGroupsWithState[FounderState[Long], VerdictPiece](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key, rows, state) =>
-          StreamingNearDup.founderFold[BucketSig, VerdictPiece](
-            horizonMs, _.doc_id, _.ts,
-            (r, _, dup) => Iterator(VerdictPiece(r.doc_id, r.ts, key._1, dup,
+          StreamingNearDup.founderFold[BucketSig, VerdictPiece, Long](
+            horizonMs, _.doc_id, _.ts, _.doc_id,
+            (r, _, _, dup) => Iterator(VerdictPiece(r.doc_id, r.ts, key._1, dup,
               r.lang_pred, r.quality, r.top_word_ratio, r.dup_3gram_ratio,
               r.is_contaminated)))(rows, state)
       }

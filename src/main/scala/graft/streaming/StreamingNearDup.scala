@@ -5,25 +5,33 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
+import graft.ops.TextDedup
+
 /** Streaming MinHash-LSH near-duplicate detection over a document stream
   * (doc_id, text, ts) — the continuous analogue of
   * [[graft.ops.TextDedup.lshPairs]].
   *
   * MinHash signatures depend only on a document's OWN shingle set, so they
-  * are a stateless per-row projection here — bit-identical to the batch
-  * operator's per-doc signatures (same md5-derived hash family, same
-  * band/bucket keys), which the spec asserts. The only stateful step is
-  * band-bucket founder tracking: per (band, bucket_key) the state store
-  * remembers the first document; later arrivals in the same bucket are
-  * emitted as near-dup candidates against the founder. State is one id per
-  * bucket and is reaped by event-time timeout past the watermark horizon,
-  * so memory is bounded by (distinct buckets in horizon), shuffled by
-  * bucket key — no global structures, holds at any executor count.
+  * are a stateless per-row projection here, built from the batch
+  * operator's own definitions: shingles from
+  * [[graft.ops.TextDedup.trigrams]], minhashes from
+  * [[graft.ops.TextDedup.minhashKey]] and band keys from
+  * [[graft.ops.TextDedup.bandKeys]], so they are bit-identical to the
+  * batch keys, which the spec asserts. The only stateful step is
+  * band-bucket founder tracking by the one fold [[founderFold]]: per
+  * (band, bucket_key) the state store remembers the first document; later
+  * arrivals in the same bucket are emitted as near-dup candidates against
+  * the founder. State is one [[FounderState]] per bucket and is reaped by
+  * event-time timeout past the watermark horizon, so memory is bounded by
+  * (distinct buckets in horizon), shuffled by bucket key — no global
+  * structures, holds at any executor count.
   */
 object StreamingNearDup {
 
   final case class BucketRow(doc_id: Long, band: Int, bucket_key: String, ts: Timestamp)
-  final case class FounderState(founder: Long, maxTs: Long)
+  /** One live bucket's state: its founder's id, the newest event time seen
+    * in it (ms) and the founder's payload. */
+  final case class FounderState[P](founder: Long, maxTs: Long, payload: P)
   final case class DupOut(doc_id: Long, dup_of: Long, band: Int, bucket_key: String)
   final case class EmbBucketRow(vec_id: Long, t: Int, sig: Long, ts: Timestamp)
   final case class EmbDupOut(vec_id: Long, dup_of: Long, t: Int, sig: Long)
@@ -37,9 +45,6 @@ object StreamingNearDup {
   final case class EmbVBucketRow(vec_id: Long, embedding: Array[Float],
       t: Int, sig: Long, ts: Timestamp)
   final case class EmbVerifiedOut(a: Long, b: Long, cosine: Double)
-
-  private[streaming] def h32sql(e: String) =
-    s"cast(conv(substring(md5($e), 1, 8), 16, 10) as bigint)"
 
   /** Corrupt-row guard for DOCUMENT streams: a NULL doc_id would throw in
     * the bucket-row encoder's non-nullable Long field and a NULL ts would
@@ -72,17 +77,23 @@ object StreamingNearDup {
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
   /** THE founder-per-bucket state fold, shared by every streaming dedup
-    * path (MinHash / SimHash / embedding near-dups and the curation
-    * verdict): rows of one bucket group arrive per micro-batch, are
-    * ordered deterministically by (event time, id), the first-ever row
-    * founds the bucket, and `emit(row, founder, isDup)` shapes the output
-    * (dup rows only for the near-dup paths; a verdict piece per row for
-    * curation). State is one (founder, maxTs) pair per live bucket,
-    * reaped by event-time timeout `horizonMs` past the bucket's newest
-    * row — bounded by distinct buckets inside the watermark horizon. */
-  private[streaming] def founderFold[R, O](horizonMs: Long, idOf: R => Long,
-      tsOf: R => Timestamp, emit: (R, Long, Boolean) => Iterator[O])(
-      rows: Iterator[R], state: GroupState[FounderState]): Iterator[O] = {
+    * path (MinHash / SimHash / embedding near-dups, their verified forms
+    * and the curation verdict): rows of one bucket group arrive per
+    * micro-batch, are ordered deterministically by (event time, id), the
+    * first-ever row founds the bucket with its `payloadOf` in the state,
+    * and `emit(row, founder, founderPayload, isDup)` shapes the output
+    * (dup rows only for the near-dup paths, after an in-state check
+    * against the founder's fingerprint / vector for the verified ones; a
+    * verdict piece per row for curation). A path with nothing to verify
+    * carries the row's id as payload; each query builder picks `P`, and
+    * with it the state's encoding. State is one [[FounderState]] per live
+    * bucket, reaped by event-time timeout `horizonMs` past the bucket's
+    * newest row — bounded by distinct buckets inside the watermark
+    * horizon, each at most one fingerprint/vector in size. */
+  private[streaming] def founderFold[R, O, P](horizonMs: Long, idOf: R => Long,
+      tsOf: R => Timestamp, payloadOf: R => P,
+      emit: (R, Long, P, Boolean) => Iterator[O])(
+      rows: Iterator[R], state: GroupState[FounderState[P]]): Iterator[O] = {
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
       val sorted = rows.toSeq.sortBy(r => (micros(tsOf(r)), idOf(r)))
@@ -91,11 +102,11 @@ object StreamingNearDup {
       sorted.foreach { r =>
         st match {
           case None =>
-            st = Some(FounderState(idOf(r), tsOf(r).getTime))
-            out ++= emit(r, idOf(r), false)
+            st = Some(FounderState(idOf(r), tsOf(r).getTime, payloadOf(r)))
+            out ++= emit(r, idOf(r), payloadOf(r), false)
           case Some(f) =>
             st = Some(f.copy(maxTs = math.max(f.maxTs, tsOf(r).getTime)))
-            out ++= emit(r, f.founder, f.founder != idOf(r))
+            out ++= emit(r, f.founder, f.payload, f.founder != idOf(r))
         }
       }
       st.foreach { f =>
@@ -106,77 +117,35 @@ object StreamingNearDup {
     }
   }
 
-  /** [[founderFold]] with a PAYLOAD carried in the founder state (the
-    * founder's fingerprint / vector), so a verify step can run inside the
-    * state function where both sides of the pair are at hand — same
-    * ordering, founding, eviction and memory contract; state is
-    * (founder, maxTs, payload) per live bucket, payload size bounded by
-    * one fingerprint/vector. */
-  private[streaming] def founderFoldP[R, O, P](horizonMs: Long, idOf: R => Long,
-      tsOf: R => Timestamp, payloadOf: R => P,
-      emit: (R, Long, P, Boolean) => Iterator[O])(
-      rows: Iterator[R], state: GroupState[(Long, Long, P)]): Iterator[O] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val sorted = rows.toSeq.sortBy(r => (micros(tsOf(r)), idOf(r)))
-      var st = state.getOption
-      val out = Seq.newBuilder[O]
-      sorted.foreach { r =>
-        st match {
-          case None =>
-            st = Some((idOf(r), tsOf(r).getTime, payloadOf(r)))
-            out ++= emit(r, idOf(r), payloadOf(r), false)
-          case Some((f, maxTs, p)) =>
-            st = Some((f, math.max(maxTs, tsOf(r).getTime), p))
-            out ++= emit(r, f, p, f != idOf(r))
-        }
-      }
-      st.foreach { s =>
-        state.update(s)
-        state.setTimeoutTimestamp(s._2 + horizonMs)
-      }
-      out.result().iterator
-    }
+  /** Adds `band_keys`, the row's [[graft.ops.TextDedup.bandKeys]] array, to
+    * a frame holding a distinct-shingle array `sh`: minhash_j = min over
+    * `sh` of [[graft.ops.TextDedup.minhashKey]](s, j), the per-row form of
+    * the batch aggregate. The minhashes are projected as columns
+    * m0..m{n-1} before the band keys read them, so each is evaluated once.
+    * Shared with [[StreamingCuration]]. */
+  private[streaming] def withBandKeys(df: DataFrame, nHashes: Int,
+      rowsPerBand: Int): DataFrame = {
+    val ms = (0 until nHashes).map(j => s"m$j")
+    val keys = TextDedup.bandKeys(ms.map(col), rowsPerBand)
+    df.select(col("*") +: ms.zipWithIndex.map { case (m, j) =>
+        array_min(transform(col("sh"), TextDedup.minhashKey(_, j))).as(m) }: _*)
+      .withColumn("band_keys", array(keys: _*))
+      .drop(ms: _*)
   }
 
-  /** MinHash signature columns m0..m{n-1} over a distinct-shingle array
-    * column named `sh` — the batch hash family verbatim; shared with
-    * [[StreamingCuration]]. */
-  private[streaming] def minhashSigCols(nHashes: Int): Seq[org.apache.spark.sql.Column] =
-    (0 until nHashes).map { j =>
-      expr(s"array_min(transform(sh, s -> ${h32sql(s"concat(s, ':$j')")}))").as(s"m$j")
-    }
-
-  /** Band bucket structs (band, bucket_key) over columns m0..m{n-1}. */
-  private[streaming] def bandStructCols(nHashes: Int,
-      rowsPerBand: Int): Seq[org.apache.spark.sql.Column] =
-    (0 until nHashes / rowsPerBand).map { b =>
-      val ks = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(j => col(s"m$j").cast("string"))
-      struct(lit(b).as("band"), concat_ws(",", ks: _*).as("bucket_key"))
-    }
-
-  /** Stateless per-row band buckets, schema (doc_id, band, bucket_key, ts).
-    * Matches the batch bucket keys exactly: minhash_j = min over distinct
-    * word-3-gram shingles of h32(shingle ++ ":" ++ j); bucket_key = the
-    * band's minhashes joined "," in j order. Docs with no 3-gram (under
-    * 3 words) produce no buckets, as in batch. */
-  def bandBuckets(docs: DataFrame, nHashes: Int = 8, rowsPerBand: Int = 2): DataFrame = {
-    val sigs = minhashSigCols(nHashes)
-    val bands = bandStructCols(nHashes, rowsPerBand)
-    cleanDocRows(docs)
-      .withColumn("w", split(col("text"), " "))
-      .withColumn("sh", expr(
-        """array_distinct(CASE WHEN size(w) >= 3
-          |  THEN transform(sequence(1, size(w) - 2),
-          |                 i -> concat_ws(' ', w[i-1], w[i], w[i+1]))
-          |  ELSE array() END)""".stripMargin))
-      .filter(size(col("sh")) > 0)
-      .select((Seq(col("doc_id"), col("ts")) ++ sigs): _*)
-      .select(col("doc_id"), col("ts"), explode(array(bands: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"),
-        col("bb.bucket_key").as("bucket_key"), col("ts"))
-  }
+  /** Stateless per-row band buckets, schema (doc_id, band, bucket_key, ts):
+    * the batch bucket keys exactly, over the doc's distinct
+    * [[graft.ops.TextDedup.trigrams]] ([[withBandKeys]]). Docs with no
+    * 3-gram (under 3 words) produce no buckets, as in batch. */
+  def bandBuckets(docs: DataFrame, nHashes: Int = 8, rowsPerBand: Int = 2): DataFrame =
+    withBandKeys(cleanDocRows(docs)
+        .withColumn("w", split(col("text"), " "))
+        .withColumn("sh", array_distinct(TextDedup.trigrams("w")))
+        .filter(size(col("sh")) > 0)
+        .select(col("doc_id"), col("ts"), col("sh")), nHashes, rowsPerBand)
+      .select(col("doc_id"), col("ts"),
+        posexplode(col("band_keys")).as(Seq("band", "bucket_key")))
+      .select(col("doc_id"), col("band"), col("bucket_key"), col("ts"))
 
   /** Near-dup candidates: (doc_id, dup_of, band, bucket_key), one row per
     * colliding band. First writer per bucket wins founder; ties inside one
@@ -192,32 +161,34 @@ object StreamingNearDup {
       .withWatermark("ts", s"$latenessMinutes minutes")
       .as[BucketRow]
       .groupByKey(r => (r.band, r.bucket_key))
-      .flatMapGroupsWithState[FounderState, DupOut](
+      .flatMapGroupsWithState[FounderState[Long], DupOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, rows, state: GroupState[FounderState]) =>
-          founderFold[BucketRow, DupOut](horizonMs, _.doc_id, _.ts,
-            (r, founder, dup) =>
+        (key, rows, state) =>
+          founderFold[BucketRow, DupOut, Long](horizonMs, _.doc_id, _.ts, _.doc_id,
+            (r, founder, _, dup) =>
               if (dup) Iterator(DupOut(r.doc_id, founder, key._1, key._2))
               else Iterator.empty)(rows, state)
       }
   }
 
   /** Stateless per-row SimHash band buckets over a document stream:
-    * (doc_id, band, chunk, ts) — the four 8-bit bands of the 32-bit
-    * fingerprint ([[graft.ops.TextDedup.simhashNearDups]]'s candidate
-    * keys), computed per row via the shared
+    * (doc_id, simhash, band, chunk, ts) — the four 8-bit bands of the
+    * 32-bit fingerprint ([[graft.ops.TextDedup.simhashNearDups]]'s
+    * candidate keys), computed per row via the shared
     * [[graft.ops.TextDedup.simhashColumn]] expression (bit-identical to
-    * the batch wide-agg: integer bit-sums are order-independent). Docs
-    * with no words produce no buckets, as in batch. */
+    * the batch wide-agg: integer bit-sums are order-independent). The
+    * fingerprint stays on each row for the VERIFIED stage, where the
+    * founder's rides the bucket state; the candidate stage ignores it.
+    * Docs with no words produce no buckets, as in batch. */
   def simhashBuckets(docs: DataFrame): DataFrame =
     cleanDocRows(docs)
       .filter(size(filter(split(col("text"), " "), w => w =!= "")) > 0)
       .select(col("doc_id"), col("ts"),
-        graft.ops.TextDedup.simhashColumn("text").as("simhash"))
+        TextDedup.simhashColumn("text").as("simhash"))
       .select(col("doc_id"), col("ts"), col("simhash"),
         posexplode(array((0 until 4).map(i =>
           expr(s"(simhash >> ${8 * i}) & 255")): _*)).as(Seq("band", "chunk")))
-      .select(col("doc_id"), col("band"), col("chunk"), col("ts"))
+      .select(col("doc_id"), col("simhash"), col("band"), col("chunk"), col("ts"))
 
   /** Streaming SimHash near-dup candidates: (doc_id, dup_of, band, chunk)
     * — the continuous analogue of the lossless hamming-join candidate
@@ -232,35 +203,22 @@ object StreamingNearDup {
       .withWatermark("ts", s"$latenessMinutes minutes")
       .as[ShBucketRow]
       .groupByKey(r => (r.band, r.chunk))
-      .flatMapGroupsWithState[FounderState, ShDupOut](
+      .flatMapGroupsWithState[FounderState[Long], ShDupOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, rows, state: GroupState[FounderState]) =>
-          founderFold[ShBucketRow, ShDupOut](horizonMs, _.doc_id, _.ts,
-            (r, founder, dup) =>
+        (key, rows, state) =>
+          founderFold[ShBucketRow, ShDupOut, Long](horizonMs, _.doc_id, _.ts, _.doc_id,
+            (r, founder, _, dup) =>
               if (dup) Iterator(ShDupOut(r.doc_id, founder, key._1, key._2))
               else Iterator.empty)(rows, state)
       }
   }
 
-  /** [[simhashBuckets]] with the fingerprint kept on each bucket row —
-    * input to the VERIFIED near-dup stage, where the founder's fingerprint
-    * rides the bucket state. */
-  def simhashBucketsFp(docs: DataFrame): DataFrame =
-    cleanDocRows(docs)
-      .filter(size(filter(split(col("text"), " "), w => w =!= "")) > 0)
-      .select(col("doc_id"), col("ts"),
-        graft.ops.TextDedup.simhashColumn("text").as("simhash"))
-      .select(col("doc_id"), col("ts"), col("simhash"),
-        posexplode(array((0 until 4).map(i =>
-          expr(s"(simhash >> ${8 * i}) & 255")): _*)).as(Seq("band", "chunk")))
-      .select(col("doc_id"), col("simhash"), col("band"), col("chunk"), col("ts"))
-
   /** Streaming SimHash near-dups WITH the hamming verify closed in-stream:
     * (a, b, hamming) pairs, a < b, hamming <= `maxHamming` — the
     * continuous analogue of [[graft.ops.TextDedup.simhashNearDups]]'s full
     * output (candidates + bit_count verify), not just its candidate stage.
-    * The founder's 32-bit fingerprint rides the bucket state (one extra
-    * long per live bucket), so the verify is a bitCount(xor) at emission —
+    * The founder's 32-bit fingerprint is the bucket state's payload, so
+    * the verify is a bitCount(xor) at emission —
     * no downstream join, no second stateful operator. One row per
     * colliding band (consumers dedup by (a, b) — on bounded input the
     * DISTINCT pair set equals the batch operator's for buckets of size
@@ -272,14 +230,14 @@ object StreamingNearDup {
     val spark = docs.sparkSession
     import spark.implicits._
     val horizonMs = latenessMinutes * 60 * 1000L
-    simhashBucketsFp(docs)
+    simhashBuckets(docs)
       .withWatermark("ts", s"$latenessMinutes minutes")
       .as[ShVBucketRow]
       .groupByKey(r => (r.band, r.chunk))
-      .flatMapGroupsWithState[(Long, Long, Long), ShVerifiedOut](
+      .flatMapGroupsWithState[FounderState[Long], ShVerifiedOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (_, rows, state) =>
-          founderFoldP[ShVBucketRow, ShVerifiedOut, Long](
+          founderFold[ShVBucketRow, ShVerifiedOut, Long](
             horizonMs, _.doc_id, _.ts, _.simhash,
             (r, founder, founderFp, dup) =>
               if (!dup) Iterator.empty
@@ -317,7 +275,7 @@ object StreamingNearDup {
     * [[graft.ops.Similarity.embedNearDups]]'s candidate stage (cosine
     * verification runs downstream on the emitted pairs, where both
     * vectors are at hand). Same founder-per-bucket state shape as the
-    * MinHash path: one id per live bucket, reaped by event-time timeout —
+    * MinHash path: one [[FounderState]] per live bucket, reaped by event-time timeout —
     * memory bounded by distinct buckets in the watermark horizon at any
     * executor count. */
   def embNearDups(embs: DataFrame, tables: Int, planes: Int, dims: Int,
@@ -329,11 +287,11 @@ object StreamingNearDup {
       .withWatermark("ts", s"$latenessMinutes minutes")
       .as[EmbBucketRow]
       .groupByKey(r => (r.t, r.sig))
-      .flatMapGroupsWithState[FounderState, EmbDupOut](
+      .flatMapGroupsWithState[FounderState[Long], EmbDupOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, rows, state: GroupState[FounderState]) =>
-          founderFold[EmbBucketRow, EmbDupOut](horizonMs, _.vec_id, _.ts,
-            (r, founder, dup) =>
+        (key, rows, state) =>
+          founderFold[EmbBucketRow, EmbDupOut, Long](horizonMs, _.vec_id, _.ts, _.vec_id,
+            (r, founder, _, dup) =>
               if (dup) Iterator(EmbDupOut(r.vec_id, founder, key._1, key._2))
               else Iterator.empty)(rows, state)
       }
@@ -361,9 +319,8 @@ object StreamingNearDup {
   /** Streaming embedding near-dups WITH the cosine verify closed in-stream:
     * (a, b, cosine) pairs, a < b, cosine >= `minCosine` — the continuous
     * analogue of [[graft.ops.Similarity.embedNearDups]]'s full output.
-    * The founder's vector rides the bucket state (state per live bucket
-    * grows from two longs to one vector — still bounded by buckets in the
-    * watermark horizon), so verification happens at emission with both
+    * The founder's vector is the bucket state's payload (one vector per
+    * live bucket — still bounded by buckets in the watermark horizon), so verification happens at emission with both
     * vectors at hand: no downstream join against a vector store. One row
     * per colliding table (consumers dedup by (a, b); star-vs-clique
     * semantics as documented on [[nearDups]]). */
@@ -384,10 +341,10 @@ object StreamingNearDup {
       .withWatermark("ts", s"$latenessMinutes minutes")
       .as[EmbVBucketRow]
       .groupByKey(r => (r.t, r.sig))
-      .flatMapGroupsWithState[(Long, Long, Array[Float]), EmbVerifiedOut](
+      .flatMapGroupsWithState[FounderState[Array[Float]], EmbVerifiedOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (_, rows, state) =>
-          founderFoldP[EmbVBucketRow, EmbVerifiedOut, Array[Float]](
+          founderFold[EmbVBucketRow, EmbVerifiedOut, Array[Float]](
             horizonMs, _.vec_id, _.ts, _.embedding,
             (r, founder, founderEmb, dup) =>
               if (!dup) Iterator.empty

@@ -173,9 +173,9 @@ class RewriteParitySpec extends SparkSpec {
     assert(neuT === refT)
   }
 
-  /** Ten seeded 3-float vectors; vec 5 holds a NaN element, so every
-    * cosine it takes part in is NaN, which Spark's window ranks FIRST under
-    * `cosine DESC`. */
+  /** Ten seeded 3-float vectors; vec 5 holds a NaN element, so its norm
+    * and every cosine it takes part in are NaN. Every top-k path drops it
+    * as a corrupt row, as it drops a zero-norm one. */
   private def nanCorpus: DataFrame = {
     val rnd = new scala.util.Random(1)
     (1L to 10L).map { i =>
@@ -191,24 +191,29 @@ class RewriteParitySpec extends SparkSpec {
     df.as[(Long, Long, Double, Int)].collect().map { case (v, n, c, r) =>
       (v, n, java.lang.Double.doubleToLongBits(c), r) }.toSet
 
-  test("ivfTopK ranks NaN cosines as the cell-join + window does") {
+  /** The corrupt-row rule of every top-k path: a norm that is not > 0
+    * (Spark orders NaN above every double, hence the isnan). */
+  private def normed(emb: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    emb.filter(expr("graft_norm_f(embedding) > 0 AND NOT isnan(graft_norm_f(embedding))"))
+  }
+
+  test("ivfTopK drops a NaN-norm row as query and as neighbor") {
     val emb = nanCorpus
     val neu = bits(Similarity.ivfTopK(emb, k = 2, nlist = 2, nprobe = 2))
-    val ref = bits(ivfTopKJoinWindow(emb,
+    val ref = bits(ivfTopKJoinWindow(normed(emb),
       Similarity.ivfProbes(emb, nlist = 2, nprobe = 2), 2))
-    assert(neu.exists(r => java.lang.Double.isNaN(
-      java.lang.Double.longBitsToDouble(r._3))))
+    assert(neu.nonEmpty && !neu.exists(r => r._1 == 5L || r._2 == 5L))
     assert(neu === ref)
   }
 
-  test("annTopK ranks NaN cosines as the mirrored window does") {
+  test("annTopK drops a NaN-norm row as query and as neighbor") {
     val emb = nanCorpus
     val cand = Similarity.annCandidates(emb, tables = 4, planes = 2)
       .localCheckpoint()
     val neu = bits(Similarity.annTopK(emb, k = 2, candDf = Some(cand)))
-    val ref = bits(annTopKWindow(emb, 2, cand))
-    assert(neu.exists(r => java.lang.Double.isNaN(
-      java.lang.Double.longBitsToDouble(r._3))))
+    val ref = bits(annTopKWindow(normed(emb), 2, cand))
+    assert(neu.nonEmpty && !neu.exists(r => r._1 == 5L || r._2 == 5L))
     assert(neu === ref)
   }
 

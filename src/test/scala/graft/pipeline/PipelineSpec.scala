@@ -204,7 +204,7 @@ class PipelineSpec extends SparkSpec {
         .groupBy(_._2).values.map(_.map(_._1).sorted.toSeq).toSet
     assert(partition(Some(dir)) === partition(None))
     assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("greedy_assign_r")))
+      .exists(_.getName.startsWith("greedy_state_r")))
   }
 
   test("connected components: durable checkpoint round-trip") {

@@ -78,7 +78,13 @@ class StreamingSpec extends SparkSpec {
     val docs = Seq(
       doc(1L, "the quick brown fox jumps over the lazy dog today", 0),
       doc(2L, "the quick brown fox jumps over the lazy dog tonight", 1),
-      doc(3L, "completely different text with no overlap at all whatsoever", 1))
+      doc(3L, "completely different text with no overlap at all whatsoever", 1),
+      // under 3 words: no shingle, so no bucket on either side
+      doc(4L, "two words", 1),
+      // a repeated trigram: the signature is over DISTINCT shingles
+      doc(5L, "spam eggs spam eggs spam eggs and ham", 1),
+      // doc 3's text under another id: collides in every band
+      doc(6L, "completely different text with no overlap at all whatsoever", 2))
     val docsDf = docs.toDF("doc_id", "text", "ts")
 
     // bucket keys bit-equal to the batch LSH operator
@@ -95,9 +101,11 @@ class StreamingSpec extends SparkSpec {
         .as("bucket_key"))
       .as[(Long, Int, String)].collect().toSet
     assert(streamKeys === batchSigs)
+    assert(streamKeys.map(_._1) === Set(1L, 2L, 3L, 5L, 6L))
+    assert(streamKeys.map(_._2) === Set(0, 1, 2, 3))
 
     // founder tracking across micro-batches: doc 1 arrives first, doc 2
-    // collides later -> flagged against founder 1; doc 3 never flagged
+    // collides later -> flagged against founder 1; doc 6 against founder 3
     val in = MemoryStream[(Long, String, Timestamp)]
     val q = StreamingNearDup.nearDups(in.toDF().toDF("doc_id", "text", "ts"))
       .writeStream.format("memory").queryName("neardup_out")
@@ -109,12 +117,32 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val dups = spark.table("neardup_out")
         .select($"doc_id", $"dup_of").distinct().as[(Long, Long)].collect().toSet
-      assert(dups === Set((2L, 1L)))
+      assert(dups === Set((2L, 1L), (6L, 3L)))
       // pair set matches the batch LSH candidate pairs
       val batchPairs = graft.ops.TextDedup.lshPairs(batchDocs)
         .as[(Long, Long)].collect().toSet
-      assert(batchPairs === Set((1L, 2L)))
+      assert(batchPairs === Set((1L, 2L), (3L, 6L)))
     } finally q.stop()
+  }
+
+  test("band-key builders reject a hash count that does not split into whole bands") {
+    val spark2 = spark
+    import spark2.implicits._
+    val docsDf = Seq((1L, "the quick brown fox jumps over the lazy dog",
+      new Timestamp(1735689600000L))).toDF("doc_id", "text", "ts")
+    val batchDocs = docsDf.withColumn("lang", lit("en"))
+      .withColumn("source", lit("t")).withColumn("n_chars", length($"text"))
+    // 8 hashes in bands of 3 would leave a partial third band (j = 6, 7)
+    val thrown = Seq(
+      intercept[IllegalArgumentException](
+        graft.ops.TextDedup.signatureIndex(batchDocs, 8, 3).collect()),
+      intercept[IllegalArgumentException](
+        graft.ops.TextDedup.lshPairs(batchDocs, 8, 3).collect()),
+      intercept[IllegalArgumentException](
+        StreamingNearDup.bandBuckets(docsDf, 8, 3).collect()))
+    thrown.foreach { e =>
+      assert(e.getMessage.contains("8") && e.getMessage.contains("3"), e.getMessage)
+    }
   }
 
   test("streaming near-dup at sf0.01 volume: founder state is evicted past the watermark") {
