@@ -43,9 +43,8 @@ object Presets {
   /** Random-hyperplane LSH hot-bucket cap (also the operator default). */
   val annMaxBucket: Int = Similarity.defaultMaxBucket.get
 
-  /** Giant-component bound for the greedy clusterer (operator default —
-    * restated here so the preset is self-contained). */
-  val maxComponentSize: Int = 3000
+  /** Giant-component bound for the greedy clusterer (also the operator default). */
+  val maxComponentSize: Int = GreedyClustering.defaultMaxComponentSize
 
   /** Valve-on blocking configuration (reference thresholds, capped df). */
   val blocking: Blocking.Config = Blocking.Config(maxBlockDf = Some(maxBlockDf))

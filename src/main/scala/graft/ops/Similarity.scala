@@ -369,8 +369,10 @@ object Similarity {
     reg(embeddings)
     val cand = candDf.getOrElse(
       annCandidates(embeddings, tables, planes, maxBucket))
+    // a zero- or NaN-norm row has no cosine: dropped, as in annTopK
     val e = embeddings.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", norm("embedding"))
+      .filter(col("nrm") > 0 && !isnan(col("nrm")))
     cand
       .join(e.select(col("vec_id").as("a"), col("embedding").as("ea"), col("nrm").as("na")), "a")
       .join(e.select(col("vec_id").as("b"), col("embedding").as("eb"), col("nrm").as("nb")), "b")

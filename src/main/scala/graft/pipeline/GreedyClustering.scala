@@ -38,11 +38,12 @@ import graft.engine._
   * subset label the groups, a mention without a group is its own, and
   * phase (2) first drops the groups above `LonerComponentCap`.
   *
-  * Control flow reads observations, not extra jobs: whether any component
-  * exceeds `maxComponentSize`, and whether an attachment round proposed
-  * anything, are row counts observed on the checkpoint that materializes
-  * the frame in question ([[graft.checkpoint.CheckpointStore.materialize]],
-  * as in [[ConnectedComponents.run]]).
+  * Sizes ride the frames they describe (`comp_size` on `cc`, a cluster's
+  * `size` on its seed row), and control flow reads observations, not extra
+  * jobs: whether any component exceeds `maxComponentSize` is the
+  * `max(comp_size)` observed on the `cc` cut, and whether an attachment
+  * round proposed anything is the row count observed on its proposals' cut
+  * ([[graft.checkpoint.CheckpointStore.materialize]], as in [[ConnectedComponents.run]]).
   */
 object GreedyClustering {
 
@@ -55,10 +56,10 @@ object GreedyClustering {
   final case class EntryRow(token: String, is_abbr: Boolean,
       is_before_dot: Boolean, name_part: Int, ord: Int)
   final case class CoreOut(mention_id: Long, cluster_id: Long,
-      profile: Seq[EntryRow])
-  final case class ProfRow(cluster_id: Long, profile: Seq[EntryRow])
+      profile: Seq[EntryRow], size: Int)
+  final case class ProfRow(cluster_id: Long, profile: Seq[EntryRow], size: Int)
   final case class FoldOut(cluster_id: Long, profile: Seq[EntryRow],
-      accepted: Seq[Long])
+      accepted: Seq[Long], size: Int)
   final case class AttachToks(cluster_id: Long, mention_id: Long,
       weight: Long, toks: Seq[TokRow])
   /** The reference's seed/visit order key (MessagePassing.java:158-162):
@@ -80,7 +81,7 @@ object GreedyClustering {
     (toks.length, toks.count(_.is_abbr), -weight, id)
 
   /** Exact reference BFS per component via typed cogroup; emits each ref's
-    * cluster and, on the seed row, the cluster's final profile. */
+    * cluster and, on the seed row, the cluster's final profile and size. */
   private def exactCluster(ms: Dataset[MentionRow], es: Dataset[EdgeRow],
       hier: String): Dataset[CoreOut] = {
     import ms.sparkSession.implicits._
@@ -89,8 +90,10 @@ object GreedyClustering {
         val refs = mi.map(r => Greedy.Ref(r.mention_id, r.name, r.weight, toToks(r.toks))).toSeq
         val (assign, profiles) =
           Greedy.cluster(refs, ei.map(e => (e.src, e.dst)).toSeq, hierOf(hier))
+        val sizes = assign.groupMapReduce(_._2)(_ => 1)(_ + _)
         assign.iterator.map { case (id, c) =>
-          CoreOut(id, c, if (id == c) toEntryRows(profiles(c)) else Seq.empty)
+          if (id == c) CoreOut(id, c, toEntryRows(profiles(c)), sizes(c))
+          else CoreOut(id, c, Seq.empty, 0)
         }
       }
   }
@@ -122,6 +125,9 @@ object GreedyClustering {
     * attachment rounds only. */
   private val LonerComponentCap = 3000
 
+  /** Giant-component bound: larger components take the three-phase path. */
+  val defaultMaxComponentSize: Int = 3000
+
   /** assignments(mention_id, name, weight, component_id, cluster_id):
     * cluster_id = BFS-seed mention of the consistency clusterer. */
   def assignments(
@@ -129,7 +135,7 @@ object GreedyClustering {
       tokens: DataFrame,
       candidates: DataFrame,
       hierarchy: String = "soundex",
-      maxComponentSize: Int = 3000,
+      maxComponentSize: Int = defaultMaxComponentSize,
       /** When set, each attachment round's state (assignments, with the
         * profiles on seed rows) and the connected-component loops (`cc`,
         * `cc_strong`, `cc_loner`) are snapshotted under it as parquet, not
@@ -137,9 +143,9 @@ object GreedyClustering {
         * clusters with dynamic allocation. Every cut goes through
         * CheckpointStore.materialize (no inference job). */
       durableDir: Option[String] = None,
-      /** Instrumentation valve (Bench): receives (phase, seconds) for the
-        * stage's internal phases — cc / prep / small / core / loner /
-        * attach. When set, the small-component output is additionally
+      /** Instrumentation valve (`Bench` and erbench's traced chain): receives
+        * (phase, seconds) for the stage's internal phases — cc / prep / small /
+        * core / loner / attach. When set, the small-component output is additionally
         * localCheckpoint'ed so its wall time lands in its own phase
         * instead of the caller's final action; values are identical
         * either way. None (the default) changes nothing. */
@@ -177,46 +183,41 @@ object GreedyClustering {
       case _ => candidates.localCheckpoint()
     }
 
-    val cc = phase("cc")(ccDf
-      .map(_.select($"mention_id", $"name", $"weight", $"component_id"))
-      .getOrElse(ConnectedComponents.components(mentions, cand, durableDir.map(_ + "/cc")))
-      .localCheckpoint())
+    // each mention's component with its size, joined back once (a window
+    // would buffer a giant component in one task, see Valves.capGroups)
+    val (cc, ccObs) = phase("cc") {
+      val comps = ccDf
+        .map(_.select($"mention_id", $"name", $"weight", $"component_id"))
+        .getOrElse(ConnectedComponents.components(mentions, cand, durableDir.map(_ + "/cc")))
+      materialize(comps.join(comps.groupBy($"component_id").count()
+          .withColumnRenamed("count", "comp_size"), "component_id"),
+        None, coalesce(max($"comp_size"), lit(0L)).as("max_size"))
+    }
+    val giant = ccObs("max_size").asInstanceOf[Long] > maxComponentSize
+    // a cut pays off only when both the small and the giant path read it
+    def cutIfGiant(df: DataFrame): DataFrame = if (giant) df.localCheckpoint() else df
 
-    val mentionToks: Dataset[MentionRow] = phase("prep")(tokens
+    val mentionToks = phase("prep")(cutIfGiant(tokens
       .groupBy($"mention_id")
       .agg(sort_array(collect_list(struct(
         $"mention_id", $"token", $"pos", $"is_abbr", $"is_before_dot", $"name_part"
       ))).as("toks"))
       .join(cc, "mention_id")
-      .select($"mention_id", $"name", $"weight", $"component_id", $"toks")
-      .as[MentionRow]
-      .localCheckpoint())
+      .select($"mention_id", $"name", $"weight", $"component_id", $"comp_size", $"toks")))
 
-    val compOf = cc.select($"mention_id".as("src"), $"component_id")
-    val edges: Dataset[EdgeRow] = phase("prep")(cand
+    val compOf = cc.select($"mention_id".as("src"), $"component_id", $"comp_size")
+    val edges = phase("prep")(cutIfGiant(cand
       .groupBy(least($"dst_id", $"org_id").as("src"),
         greatest($"dst_id", $"org_id").as("dst"))
       .agg(max($"common_cnt").cast("int").as("common_cnt"))
       .join(compOf, "src")
-      .select($"component_id", $"src", $"dst", $"common_cnt")
-      .as[EdgeRow]
-      .localCheckpoint())
-
-    // the count rides the checkpoint's job; resolved HERE so the common
-    // no-giant case also skips the two anti-join stages below (with zero
-    // oversized components they are identity filters)
-    val (bigComps, nBig) = phase("prep")(materialize(cc.groupBy($"component_id").count()
-        .filter($"count" > maxComponentSize).select($"component_id"),
-      None, count(lit(1)).as("rows")))
-    val noBig = nBig("rows") == 0L
+      .select($"component_id", $"src", $"dst", $"common_cnt", $"comp_size")))
 
     // ---- exact reference path for normally-sized components
-    val small = exactCluster(
-      (if (noBig) mentionToks
-        else mentionToks.join(bigComps, Seq("component_id"), "left_anti")).as[MentionRow],
-      (if (noBig) edges
-        else edges.join(bigComps, Seq("component_id"), "left_anti")).as[EdgeRow],
-      hierarchy).toDF().select($"mention_id", $"cluster_id")
+    val isSmall = $"comp_size" <= maxComponentSize
+    val small = exactCluster(mentionToks.filter(isSmall).as[MentionRow],
+      edges.filter(isSmall).as[EdgeRow], hierarchy)
+      .toDF().select($"mention_id", $"cluster_id")
     // instrumented runs force the small path here so its wall time lands
     // in the "small" phase; the production path stays lazy (one less
     // materialization — the caller's action computes it in-stream)
@@ -225,8 +226,11 @@ object GreedyClustering {
 
     // ---- distributed giant-component path (skipped entirely when no
     // component exceeds the cap — the common case at moderate scale)
-    val bigAssigns: DataFrame = if (noBig) spark.emptyDataset[AssignRow].toDF()
+    val bigAssigns: DataFrame = if (!giant) spark.emptyDataset[AssignRow].toDF()
     else {
+    val bigMentions = mentionToks.filter(!isSmall).as[MentionRow]
+    val bigEdges = edges.filter(!isSmall)
+
     // connected components of the edge subset `sub` (src, dst, ...) as
     // (mention_id, group)
     def groupsOf(sub: DataFrame, name: String): DataFrame =
@@ -249,22 +253,19 @@ object GreedyClustering {
 
     // ---- phase 1: strong-edge sub-components, clustered exactly, profiles
     // exported
-    val (bigMentions, bigEdges, coreOut) = phase("core") {
-      val bigMentions = mentionToks.join(bigComps, Seq("component_id"))
-        .as[MentionRow].localCheckpoint()
-      val bigEdges = edges.join(bigComps, Seq("component_id")).localCheckpoint()
+    val coreOut = phase("core") {
       val strong = bigEdges.filter($"common_cnt" >= 2)
       val groups = groupsOf(strong, "cc_strong")
-      (bigMentions, bigEdges, exactSub(
-        bigMentions.toDF().join(groups, Seq("mention_id"), "left"), strong, groups))
+      exactSub(bigMentions.toDF().join(groups, Seq("mention_id"), "left"), strong, groups)
     }
 
     // running state, shaped as exactCluster's output: one (mention_id,
-    // cluster_id, profile) row per mention, the cluster's final profile on
-    // its seed row (mention_id = cluster_id) and empty elsewhere
+    // cluster_id, profile, size) row per mention, the cluster's final
+    // profile and size on its seed row (mention_id = cluster_id), empty
+    // and 0 elsewhere
     var state = coreOut
-    def profiles = state.filter($"mention_id" === $"cluster_id")
-      .select($"cluster_id", $"profile")
+    def seeds = state.filter($"mention_id" === $"cluster_id")
+    def singles = seeds.filter($"size" === 1).select($"mention_id")
 
     // ---- phase 2: loner-loner chaining. Refs left in singleton clusters
     // form weak-edge sub-components of their own (e.g. shared-nickname
@@ -273,9 +274,6 @@ object GreedyClustering {
     // them all singletons — the measured recall gap). Oversized loner
     // components fall through to the attachment rounds below.
     phase("loner") {
-      val sizes = state.groupBy($"cluster_id").count()
-      val singles = state.join(sizes.filter($"count" === 1), "cluster_id")
-        .select($"mention_id").localCheckpoint()
       val lonerEdges = bigEdges
         .join(singles.withColumnRenamed("mention_id", "src"), "src")
         .join(singles.withColumnRenamed("mention_id", "dst"), "dst")
@@ -300,10 +298,7 @@ object GreedyClustering {
     var done = false
     while (round < AttachRounds && !done) phase("attach") {
       state = materialize(state, durableDir.map(_ + s"/greedy_state_r$round"))._1
-      val sizes = state.groupBy($"cluster_id").count().localCheckpoint()
-      val singles = state.join(sizes.filter($"count" === 1), "cluster_id")
-        .select($"mention_id")
-      val multiClusters = sizes.filter($"count" > 1).select($"cluster_id")
+      val multiClusters = seeds.filter($"size" > 1).select($"cluster_id")
       val adj = bigEdges
         .select(explode(array(
           struct($"src".as("a"), $"dst".as("b")),
@@ -321,7 +316,7 @@ object GreedyClustering {
       val lonerCands = adj.join(nbrPrio, "nbr")
         .groupBy($"loner_id", $"cluster_id")
         .agg(min(struct($"_1", $"_2", $"_3", $"_4")).as("prio"))
-        .join(profiles, "cluster_id")
+        .join(seeds.select($"cluster_id", $"profile"), "cluster_id")
         .select($"loner_id", $"cluster_id", $"prio", $"profile")
         .as[LonerCand]
 
@@ -352,25 +347,24 @@ object GreedyClustering {
           .join(bigMentions.toDF().select($"mention_id", $"weight", $"toks"), "mention_id")
           .select($"cluster_id", $"mention_id", $"weight", $"toks")
           .as[AttachToks]
-        val folded = profiles.as[ProfRow].groupByKey(_.cluster_id)
+        val folded = seeds.select($"cluster_id", $"profile", $"size").as[ProfRow]
+          .groupByKey(_.cluster_id)
           .cogroup(attachToks.groupByKey(_.cluster_id)) { (k, ps, as) =>
-            val pSeq = ps.toSeq
-            if (pSeq.isEmpty) Iterator.empty
-            else {
-              val aSeq = as.toSeq
-              if (aSeq.isEmpty) Iterator.single(FoldOut(k, pSeq.head.profile, Seq.empty))
+            ps.take(1).map { p =>
+              if (!as.hasNext) FoldOut(k, p.profile, Seq.empty, p.size)
               else {
                 val h = hierOf(hierarchy)
-                val prof = fromEntryRows(pSeq.head.profile)
+                val prof = fromEntryRows(p.profile)
                 val accepted = Seq.newBuilder[Long]
-                for (a <- aSeq.sortBy(x => prioOfToks(x.toks, x.weight, x.mention_id))) {
+                for (a <- as.toSeq.sortBy(x => prioOfToks(x.toks, x.weight, x.mention_id))) {
                   val res = prof.matchRef(h, toToks(a.toks).toSeq)
                   if (res.isConsistent || res.canBecomeConsistent) {
                     prof.merge(res)
                     accepted += a.mention_id
                   }
                 }
-                Iterator.single(FoldOut(k, toEntryRows(prof), accepted.result()))
+                val acc = accepted.result()
+                FoldOut(k, toEntryRows(prof), acc, p.size + acc.length)
               }
             }
           }.toDF().localCheckpoint()
@@ -378,12 +372,14 @@ object GreedyClustering {
         // re-tested against the very profile it was proposed against
         // (matchRef does not mutate; one profile row per cluster)
         val acceptedDf = folded.select(explode($"accepted").as("mention_id"),
-          $"cluster_id", array().cast(state.schema("profile").dataType).as("profile"))
+          $"cluster_id", array().cast(state.schema("profile").dataType).as("profile"),
+          lit(0).as("size"))
         // the non-seed rows plus the folded seed rows, minus the accepted
         // loners (whose stale singleton seed rows go with them), plus the
         // accepted rows
         state = state.filter($"mention_id" =!= $"cluster_id")
-          .unionByName(folded.select($"cluster_id".as("mention_id"), $"cluster_id", $"profile"))
+          .unionByName(folded.select($"cluster_id".as("mention_id"), $"cluster_id",
+            $"profile", $"size"))
           .join(acceptedDf.select($"mention_id"), Seq("mention_id"), "left_anti")
           .unionByName(acceptedDf)
       }

@@ -228,6 +228,17 @@ class RewriteParitySpec extends SparkSpec {
     assert(neu === bits(knnBruteCrossJoin(emb.filter(col("vec_id") =!= 5L), 2)))
   }
 
+  test("embedNearDups drops a NaN-norm row before scoring its pairs") {
+    val emb = nanCorpus
+    val pairs = Similarity.embedNearDups(emb, minCosine = 0.3)
+      .as[(Long, Long, Double)].collect()
+    assert(pairs.nonEmpty && !pairs.exists(r => r._1 == 5L || r._2 == 5L))
+    // the other pairs are those scored over the same candidates without vec 5
+    val cand = Similarity.annCandidates(emb).localCheckpoint()
+    assert(pairs.toSet === Similarity.embedNearDups(normed(emb), minCosine = 0.3,
+      candDf = Some(cand)).as[(Long, Long, Double)].collect().toSet)
+  }
+
   /** The round-5 lshPairs formulation: bucket self-join + distinct. */
   private def lshPairsDistinct(d: DataFrame, maxBucket: Option[Int]): Set[(Long, Long)] = {
     val all = TextDedup.bandBuckets(d)

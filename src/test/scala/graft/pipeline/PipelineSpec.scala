@@ -196,15 +196,29 @@ class PipelineSpec extends SparkSpec {
       graft.synth.Synth.transcripts(spark, "/root/testdata/sf0.001")).localCheckpoint()
     val t = Tokenize.tokens(m).localCheckpoint()
     val c = Blocking.candidates(t).localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("greedy_durable").toString
-    def partition(durable: Option[String]) =
-      GreedyClustering.assignments(m, t, c, maxComponentSize = 2,
+    def run(cap: Int, durable: Option[String]) =
+      GreedyClustering.assignments(m, t, c, maxComponentSize = cap,
         durableDir = durable)
-        .select($"mention_id", $"cluster_id").as[(Long, Long)].collect()
-        .groupBy(_._2).values.map(_.map(_._1).sorted.toSeq).toSet
-    assert(partition(Some(dir)) === partition(None))
-    assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("greedy_state_r")))
+        .select($"mention_id", $"component_id", $"cluster_id").as[(Long, Long, Long)]
+        .collect()
+    def partition(rows: Array[(Long, Long, Long)]) =
+      rows.groupBy(_._3).values.map(_.map(_._1).sorted.toSeq).toSet
+    def tempDir() = java.nio.file.Files.createTempDirectory("greedy_durable").toString
+    def wroteRounds(dir: String) = new java.io.File(dir).listFiles()
+      .exists(_.getName.startsWith("greedy_state_r"))
+    val dir = tempDir()
+    assert(partition(run(2, Some(dir))) === partition(run(2, None)))
+    assert(wroteRounds(dir))
+    // the small/giant boundary: a component of exactly `maxComponentSize`
+    // mentions stays on the exact path, one mention more takes the giant path
+    val exact = run(Int.MaxValue, None)
+    val largest = exact.groupBy(_._2).values.map(_.length).max
+    for ((cap, giant) <- Seq(largest -> false, (largest - 1) -> true)) {
+      val d = tempDir()
+      val rows = run(cap, Some(d))
+      assert(wroteRounds(d) === giant, s"maxComponentSize $cap")
+      assert(partition(rows) === partition(exact), s"maxComponentSize $cap")
+    }
   }
 
   test("connected components: durable checkpoint round-trip") {
