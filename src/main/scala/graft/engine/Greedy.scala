@@ -19,13 +19,15 @@ import scala.collection.mutable
   * Giant components (SURVEY.md §7.5): rare shared tokens (e.g. nicknames)
   * pass the relative blocking threshold and form cross-family hubs that
   * glue most refs into one component; plain BFS there is
-  * O(edges x cluster-profile) and intractable. The distributed giant
-  * path lives in [[graft.pipeline.GreedyClustering]]: it applies the
-  * reference's own remedy — the stricter 2-common-token edge condition —
-  * to cluster family cores with [[cluster]], then chains and attaches
-  * the remaining weak-edge-only refs (nickname/initial forms) through the
-  * same consistency engine. Small components run [[cluster]] as is: it is
-  * the one BFS entry point of both paths.
+  * O(edges x cluster-profile) and intractable. The giant path lives in
+  * [[graft.pipeline.GreedyClustering]]: it applies the reference's own
+  * remedy — the stricter 2-common-token edge condition — to cluster
+  * family cores with [[cluster]], then chains and attaches the remaining
+  * weak-edge-only refs (nickname/initial forms) through the same
+  * consistency engine. A giant component whose candidate rows fit one
+  * task's budget runs those phases in that task; only a larger one runs
+  * them as distributed jobs. Small components run [[cluster]] as is: it
+  * is the one BFS entry point of every route.
   */
 object Greedy {
 
