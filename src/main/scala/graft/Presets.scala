@@ -28,9 +28,8 @@ import graft.ops.{TextDedup, Curation, Similarity, Sampling}
   *    verify at cap^2; with auto planes the expected bucket is ~16, so
   *    only pathological sign buckets are touched.
   *  - `maxComponentSize` (GreedyClustering.scala): components above it use
-  *    the 3-phase strong-core path — in one task while their candidate
-  *    rows fit `GreedyClustering.TaskCandidateRows`, as distributed jobs
-  *    above that — fidelity to the exact BFS is machine-checked every
+  *    the 3-phase strong-core path, in the one task that holds the
+  *    component — fidelity to the exact BFS is machine-checked every
   *    round (q_fidelity_greedy, fidelity_diff).
   */
 object Presets {

@@ -24,10 +24,9 @@ import scala.collection.mutable
   * remedy — the stricter 2-common-token edge condition — to cluster
   * family cores with [[cluster]], then chains and attaches the remaining
   * weak-edge-only refs (nickname/initial forms) through the same
-  * consistency engine. A giant component whose candidate rows fit one
-  * task's budget runs those phases in that task; only a larger one runs
-  * them as distributed jobs. Small components run [[cluster]] as is: it
-  * is the one BFS entry point of every route.
+  * consistency engine, all in the one task that holds the component.
+  * Small components run [[cluster]] as is: it is the one BFS entry point
+  * of both routes.
   */
 object Greedy {
 

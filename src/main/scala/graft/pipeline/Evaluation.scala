@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Stage 6 — evaluation.
@@ -18,14 +19,15 @@ import org.apache.spark.sql.functions._
 object Evaluation {
 
   def pairwiseF1(assignments: DataFrame, gold: DataFrame): DataFrame = {
-    val contingency = assignments.join(gold, "name")
-      .groupBy(col("cluster_id"), col("entity_id"))
+    // one read of gold: each (name, entity) row carries its entity's total
+    // and each contingency cell its cluster's. Both windows are small, one
+    // row per (name, entity) and per (cluster, entity)
+    val goldTotals = gold.withColumn("n_entity",
+      sum(col("cnt")).over(Window.partitionBy(col("entity_id"))))
+    assignments.join(goldTotals, "name")
+      .groupBy(col("cluster_id"), col("entity_id"), col("n_entity"))
       .agg(sum(col("cnt")).as("n"))
-    val entityTotals = gold.groupBy(col("entity_id")).agg(sum(col("cnt")).as("n_entity"))
-    val clusterTotals = contingency.groupBy(col("cluster_id")).agg(sum(col("n")).as("n_cluster"))
-    contingency
-      .join(entityTotals, "entity_id")
-      .join(clusterTotals, "cluster_id")
+      .withColumn("n_cluster", sum(col("n")).over(Window.partitionBy(col("cluster_id"))))
       .agg(
         sum(col("n") * (col("n") - 1) / 2).as("tp"),
         sum(col("n") * (col("n_entity") - col("n"))).as("fn"),

@@ -163,25 +163,31 @@ class PipelineSpec extends SparkSpec {
       val t = Tokenize.tokens(m).localCheckpoint()
       (m, t, Blocking.candidates(t).localCheckpoint())
     }
-    // (mention_id, cluster_id) with one task's budget of candidate rows;
-    // 0 is below every component, so each giant one goes distributed
-    def clusters(m: DataFrame, t: DataFrame, c: DataFrame, maxSize: Int,
-        taskEdges: Long = GreedyClustering.TaskCandidateRows) =
-      GreedyClustering.assignmentsWithin(m, t, c, "soundex", maxSize, None, None, None,
-        taskEdges).select($"mention_id", $"cluster_id").as[(Long, Long)].collect().toSet
-    def partition(rows: Set[(Long, Long)]) =
-      rows.groupBy(_._2).values.map(_.map(_._1).toSeq.sorted).toSet
+    def clusters(m: DataFrame, t: DataFrame, c: DataFrame, maxSize: Int) =
+      GreedyClustering.assignments(m, t, c, maxComponentSize = maxSize)
+        .select($"mention_id", $"component_id", $"cluster_id")
+        .as[(Long, Long, Long)].collect()
+    def split(rs: Array[(Long, Long, Long)]) = rs.groupBy(_._3).values.map(_.map(_._1).toSet).toSet
     val (m, t, c) = inputs("sf0.001")
-    val exact = partition(clusters(m, t, c, Int.MaxValue))
-    assert(partition(clusters(m, t, c, 2)) === exact)
-    // a giant component clustered in one task gets the very clusters, ids
-    // included, of the distributed route
-    for (cap <- Seq(2, 5, 20))
-      assert(clusters(m, t, c, cap) === clusters(m, t, c, cap, taskEdges = 0L),
-        s"sf0.001 maxComponentSize $cap")
+    val exact = split(clusters(m, t, c, Int.MaxValue))
+    assert(split(clusters(m, t, c, 2)) === exact)
+    // at sf0.01 the per-round batching of attachments departs from the
+    // reference BFS, so the giant path owes only a well-formed partition:
+    // one row per mention, every cluster inside one component
     val (m2, t2, c2) = inputs("sf0.01")
-    assert(clusters(m2, t2, c2, 2) === clusters(m2, t2, c2, 2, taskEdges = 0L),
-      "sf0.01 maxComponentSize 2")
+    val rows = clusters(m2, t2, c2, 2)
+    assert(rows.map(_._1).toSet === m2.select($"mention_id").as[Long].collect().toSet)
+    assert(rows.length === rows.map(_._1).distinct.length)
+    assert(rows.groupBy(_._3).values.forall(_.map(_._2).distinct.length == 1))
+    // the small/giant boundary where the paths differ: a component of
+    // exactly `maxComponentSize` mentions keeps the BFS's rows, one mention
+    // more gets the giant path's partition
+    def byComp(rs: Array[(Long, Long, Long)]) = rs.groupBy(_._2)
+    val (giant, bfs) = (byComp(rows), byComp(clusters(m2, t2, c2, Int.MaxValue)))
+    val comp = bfs.keys.filter(k => split(giant(k)) != split(bfs(k))).minBy(bfs(_).length)
+    val size = bfs(comp).length
+    assert(byComp(clusters(m2, t2, c2, size))(comp).toSet === bfs(comp).toSet)
+    assert(split(byComp(clusters(m2, t2, c2, size - 1))(comp)) === split(giant(comp)))
     // the same from parquet scans, the Pipeline's input shape (its
     // CheckpointStore stages), which the stage reads without copying
     val dir = java.nio.file.Files.createTempDirectory("greedy_parquet").toString
@@ -189,10 +195,7 @@ class PipelineSpec extends SparkSpec {
       df.write.parquet(s"$dir/$name")
       spark.read.parquet(s"$dir/$name")
     }
-    val (ms, ts, cs) = (scan(m, "m"), scan(t, "t"), scan(c, "c"))
-    assert(partition(clusters(ms, ts, cs, 2)) === exact)
-    // the distributed route reads the uncopied scan again in every loop
-    assert(partition(clusters(ms, ts, cs, 2, taskEdges = 0L)) === exact)
+    assert(split(clusters(scan(m, "m"), scan(t, "t"), scan(c, "c"), 2)) === exact)
   }
 
   test("pipeline rejects unknown clusterer and coder names before any stage") {
@@ -214,51 +217,26 @@ class PipelineSpec extends SparkSpec {
       graft.synth.Synth.transcripts(spark, "/root/testdata/sf0.001")).localCheckpoint()
     val t = Tokenize.tokens(m).localCheckpoint()
     val c = Blocking.candidates(t).localCheckpoint()
-    // `taskEdges` 0 is below every component's candidate rows: each giant
-    // component takes the distributed route, whose loops write the rounds
-    def run(cap: Int, durable: Option[String], taskEdges: Long = 0L) =
-      GreedyClustering.assignmentsWithin(m, t, c, "soundex", cap, durable, None, None,
-        taskEdges)
+    def run(cap: Int, durable: Option[String]) =
+      GreedyClustering.assignments(m, t, c, "soundex", cap, durable)
         .select($"mention_id", $"component_id", $"cluster_id").as[(Long, Long, Long)]
         .collect()
     def partition(rows: Array[(Long, Long, Long)]) =
       rows.groupBy(_._3).values.map(_.map(_._1).sorted.toSeq).toSet
     def tempDir() = java.nio.file.Files.createTempDirectory("greedy_durable").toString
-    def wrote(dir: String, prefix: String) = new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith(prefix))
-    val dir = tempDir()
-    assert(partition(run(2, Some(dir))) === partition(run(2, None)))
-    assert(wrote(dir, "greedy_state_r"))
     val exact = run(Int.MaxValue, None)
-    // the default route clusters every sf0.001 giant component in one task:
-    // no loop state is written
-    val inTaskDir = tempDir()
-    val inTask = run(2, Some(inTaskDir), GreedyClustering.TaskCandidateRows)
-    assert(partition(inTask) === partition(exact))
-    for (loop <- Seq("greedy_state_r", "cc_strong", "cc_loner"))
-      assert(!wrote(inTaskDir, loop), loop)
+    // a durable run, giant components included, persists the rounds of
+    // the connected-component loop and nothing else
+    val dir = tempDir()
+    assert(partition(run(2, Some(dir))) === partition(exact))
+    assert(new java.io.File(dir).list().toSeq === Seq("cc"))
+    assert(new java.io.File(s"$dir/cc").listFiles().exists(_.getName.startsWith("cc_labels_r")))
     // the small/giant boundary: a component of exactly `maxComponentSize`
-    // mentions stays on the exact path, one mention more takes the giant path
+    // mentions stays on the exact path (the very rows, seeds included), one
+    // mention more takes the giant path, and both give the exact partition
     val largest = exact.groupBy(_._2).values.map(_.length).max
-    for ((cap, giant) <- Seq(largest -> false, (largest - 1) -> true)) {
-      val d = tempDir()
-      val rows = run(cap, Some(d))
-      assert(wrote(d, "greedy_state_r") === giant, s"maxComponentSize $cap")
-      assert(partition(rows) === partition(exact), s"maxComponentSize $cap")
-    }
-    // the budget boundary: a giant component of exactly `taskEdges`
-    // candidate rows stays in one task, one row more goes distributed
-    val compOf = exact.map(r => r._1 -> r._2).toMap
-    val sizeOf = exact.groupBy(_._2).view.mapValues(_.length).toMap
-    val rowsOf = c.select($"dst_id").as[Long].collect().groupBy(compOf)
-      .view.mapValues(_.length.toLong).toMap
-    val largestRows = rowsOf.filter { case (comp, _) => sizeOf(comp) > 2 }.values.max
-    for ((budget, distributed) <- Seq(largestRows -> false, (largestRows - 1) -> true)) {
-      val d = tempDir()
-      val rows = run(2, Some(d), budget)
-      assert(wrote(d, "greedy_state_r") === distributed, s"taskEdges $budget")
-      assert(partition(rows) === partition(exact), s"taskEdges $budget")
-    }
+    assert(run(largest, Some(tempDir())).toSet === exact.toSet)
+    assert(partition(run(largest - 1, Some(tempDir()))) === partition(exact))
   }
 
   test("connected components: durable checkpoint round-trip") {
